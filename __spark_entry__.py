@@ -4359,9 +4359,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cdc_latest_events",
     ]
     changed_r12 = [
-        # entries whose kernel changed in round 12: the segment_dedup
-        # sentinel-row fusion, and the sketch-gauge single-action
-        # collects (hll_distinct / sketch_profile)
+        # entries pinned for kernel changes that were planned in round 12
+        # but never landed (segment_dedup sentinel-row fusion, single-
+        # action collects for hll_distinct / sketch_profile): their
+        # kernels are unchanged since round 11
         "segment_dedup", "hll_distinct", "sketch_profile",
     ]
     sampled_r8_r11 = {

@@ -242,7 +242,8 @@ def main() -> None:
     # driver's PERF_rN per-query diff has n_common > 0 without relying
     # on BENCH_DETAIL.json (which each run overwrites — the driver's
     # 8-core re-run destroyed its own 32-core detail in round 11).
-    # Values round to 0.01 s: 105 entries ≈ 3 KB on one line, far under
+    # Values round to 0.001 s (0.01 s turned entries under 5 ms into
+    # 0.0): 105 entries ≈ 3.5 KB on one line, far under
     # the capture limit the round-2 overflow hit (that was a 37-query
     # PRETTY-PRINTED dict; this is separators-packed).  Full-precision
     # detail still goes to BENCH_DETAIL.json.
@@ -250,7 +251,7 @@ def main() -> None:
         "metric": "headline_query_wall_seconds",
         "value": total,
         "unit": "sec",
-        "queries": {k: round(v, 2) for k, v in warm.items()},
+        "queries": {k: round(v, 3) for k, v in warm.items()},
         "cold_total": round(sum(cold.values()), 3),
         "n_queries": len(warm),
         "sf": sf_val,

@@ -80,6 +80,10 @@ class QueryEngine:
         """Load each (file, sheet) once and register it as a temp view
         (reference A7; SQLite staging replaced by the Catalyst catalog).
 
+        ``stage_format="memory"`` (default) registers the sheet as a
+        JVM-resident local relation built from one Arrow table
+        (:func:`read_excel_sheet`): every query's scan of it is a
+        ``LocalTableScan``, with no Python worker and no I/O.
         ``stage_format="parquet"`` additionally writes each sheet to
         ``stage_dir`` and registers the parquet read instead of the
         in-memory frame — the scale path: xlsx (zipped XML, not
@@ -137,7 +141,9 @@ class QueryEngine:
     def combine(self, bundle: QueryBundle, query: Query,
                 per_file: list[tuple[str, str, DataFrame]]) -> DataFrame:
         """Combine per-file results of one query: pivot → vertical union
-        with provenance; non-pivot → match-prefixed horizontal concat."""
+        with provenance (lazy); non-pivot → match-prefixed horizontal
+        concat, which runs the per-file queries here and returns a local
+        relation."""
         if query.pivot:
             return pivot_union([(file_name, df) for _, file_name, df in per_file])
         return horizontal_concat(

@@ -10,10 +10,10 @@
   (query_iterator.py:180-181 / :207-208): side-by-side positional concat
   of per-file results (pandas ``pd.concat(axis=1)`` semantics — alignment
   by row position, shorter side null-padded).  Spark has no row identity,
-  so each input gets a per-partition-computed global row number and the
-  frames full-outer-join on it.  Works distributed at any size; at the
-  reference's scale (small post-aggregate results) Catalyst broadcasts
-  the joins automatically.
+  so the inputs are unioned with an ordinal/position tag, collected once
+  as Arrow and laid side by side on the driver — one job set per concat.
+  This fits the reference's use (small post-aggregate results); inputs
+  over :data:`MAX_CONCAT_ROWS` are refused rather than collected.
 
 * :func:`prefix_columns` — the per-match column rename
   (query_iterator.py:111-119): every column prefixed ``{match}_``.
@@ -23,11 +23,16 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..plans.macro import strip_extension
 
-_ROWID = "__hconcat_row_id__"
+_ORD, _POS = "__hconcat_ord__", "__hconcat_pos__"
+
+# the row cap the Excel sink applies; a concat collects on the driver
+MAX_CONCAT_ROWS = 1_000_000
 
 
 def prefix_columns(df: DataFrame, match: str) -> DataFrame:
@@ -54,60 +59,48 @@ def pivot_union(named_results: list[tuple[str, DataFrame]]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), tagged)
 
 
-def with_row_index(df: DataFrame, name: str = _ROWID) -> DataFrame:
-    """Attach a 0-based dense global row index without a global sort.
-
-    Uses ``zipWithIndex`` semantics built from partition offsets: a
-    narrow ``spark_partition_id`` + per-partition ``row_number`` pass and
-    a tiny driver-side offset map — no full shuffle, preserving the
-    frame's existing row order (which, as in pandas, is the positional
-    identity being concatenated on).
-    """
-    from pyspark.sql import Window
-
-    part = F.spark_partition_id().alias("__pid__")
-    with_pid = df.withColumn("__pid__", part)
-    # per-partition counts → cumulative offsets (driver-side; #partitions is small)
-    counts = with_pid.groupBy("__pid__").count().collect()
-    offsets = {}
-    acc = 0
-    for row in sorted(counts, key=lambda r: r["__pid__"]):
-        offsets[row["__pid__"]] = acc
-        acc += row["count"]
-    offset_col = F.create_map(
-        *[x for pid, off in offsets.items() for x in (F.lit(pid), F.lit(off))]
-    )
-    w = Window.partitionBy("__pid__").orderBy(F.monotonically_increasing_id())
-    return (
-        with_pid
-        .withColumn("__rn__", F.row_number().over(w) - 1)
-        .withColumn(name, F.col("__rn__") + offset_col[F.col("__pid__")])
-        .drop("__pid__", "__rn__")
-    )
-
-
 def horizontal_concat(dfs: list[DataFrame]) -> DataFrame:
     """Positional side-by-side concat (reference A13), ragged lengths
-    null-padded exactly like ``pd.concat(axis=1)``.
+    null-padded exactly like ``pd.concat(axis=1)``; each output column
+    keeps its input's type.
 
     Column-name collisions across inputs are allowed (pandas allows
     duplicate column labels); callers that need unique names apply
     :func:`prefix_columns` first, as the reference pipeline does.
+
+    The inputs, renamed to positional temp names and tagged with their
+    ordinal and row position, are unioned and collected with one
+    ``toArrow``; the result is a local relation built from the padded
+    blocks.  Raises ``ValueError`` when the inputs together hold more
+    than :data:`MAX_CONCAT_ROWS` rows.
     """
     if not dfs:
         raise ValueError("horizontal_concat of zero frames")
     if len(dfs) == 1:
         return dfs[0]
-    indexed = [with_row_index(df) for df in dfs]
-    joined = reduce(lambda a, b: a.join(b, on=_ROWID, how="full_outer"), indexed)
-    cols = [c for df in dfs for c in df.columns]
-    out = joined.orderBy(_ROWID).drop(_ROWID)
-    if not _all_unique(cols):
-        return out
-    # prefixed names contain dots (e.g. consumer_complaints.xlsx_company) —
-    # backtick-quote so select() doesn't read them as qualified references
-    return out.select(*[f"`{c.replace('`', '``')}`" for c in cols])
-
-
-def _all_unique(xs: list[str]) -> bool:
-    return len(xs) == len(set(xs))
+    temp = [[f"__c{i}_{j}" for j in range(len(df.columns))] for i, df in enumerate(dfs)]
+    tagged = [
+        df.toDF(*names).select(F.lit(i).alias(_ORD), F.monotonically_increasing_id().alias(_POS),
+                               *names)
+        for i, (df, names) in enumerate(zip(dfs, temp))
+    ]
+    union = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged)
+    table = union.limit(MAX_CONCAT_ROWS + 1).toArrow()
+    if table.num_rows > MAX_CONCAT_ROWS:
+        raise ValueError(
+            f"horizontal_concat inputs exceed {MAX_CONCAT_ROWS} rows; "
+            "collecting them would exhaust driver memory")
+    blocks = [table.filter(pc.equal(table[_ORD], i)).sort_by(_POS).select(names)
+              for i, names in enumerate(temp)]
+    n = max(b.num_rows for b in blocks)
+    columns = [
+        pa.chunked_array(b[c].chunks + [pa.nulls(n - b.num_rows, b[c].type)], b[c].type)
+        for b in blocks for c in b.column_names
+    ]
+    schema = T.StructType([
+        T.StructField(c, f.dataType, True)
+        for df, names in zip(dfs, temp) for c, f in zip(names, df.schema.fields)
+    ])
+    out = dfs[0].sparkSession.createDataFrame(
+        pa.Table.from_arrays(columns, names=schema.names), schema)
+    return out.toDF(*[c for df in dfs for c in df.columns])

@@ -193,6 +193,7 @@ def run_recursive_union_sql(spark: SparkSession, sql: str,
         acc.createOrReplaceTempView(result_view)
         return spark.sql(name_re.sub(result_view, main_sql))
     finally:
+        # the returned DataFrame's plan is already resolved against the
+        # views, so neither needs to outlive this call
         spark.catalog.dropTempView(frontier_view)
-        # result_view stays registered only until the session ends; the
-        # returned DataFrame's plan is already resolved against it
+        spark.catalog.dropTempView(result_view)

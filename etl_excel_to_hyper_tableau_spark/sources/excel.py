@@ -7,8 +7,11 @@ A1, §7.4-4):
 
 * xlsx is zipped XML with no splittable internal structure, so the unit
   of parallelism is the *file*, never byte ranges within one;
-* small inputs (the reference's actual scale): parse on the driver and
-  ``spark.createDataFrame`` with Arrow — one JVM hop, no shuffle;
+* small inputs (the reference's actual scale): parse on the driver,
+  type the cells into one ``pyarrow.Table`` and hand it to
+  ``spark.createDataFrame``, which ships it to the JVM as Arrow batches
+  and plans it as a ``LocalTableScan`` — queries over the staged view
+  never start a Python worker;
 * many files (the 100 TB story is thousands of workbooks): load paths
   with ``spark.read.format("binaryFile")`` and parse each file inside
   executors via ``mapInPandas`` — per-file parallelism, schema declared
@@ -24,6 +27,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -80,33 +84,31 @@ def merge_excel_schemas(schemas) -> T.StructType:
     return T.StructType([T.StructField(c, types[c], True) for c in order])
 
 
-def _coerce(rows: list[list], schema: T.StructType) -> list[tuple]:
-    out = []
-    for r in rows:
-        vals = []
-        for v, f in zip(r, schema.fields):
-            if v is None:
-                vals.append(None)
-            elif isinstance(f.dataType, T.DoubleType):
-                vals.append(float(v))
-            elif isinstance(f.dataType, T.LongType):
-                vals.append(int(v))
-            elif isinstance(f.dataType, T.StringType):
-                vals.append(str(v))
-            else:
-                vals.append(v)
-        out.append(tuple(vals))
-    return out
+# inferred Spark type → (cell cast, Arrow type)
+_CELL_TYPES = {"long": (int, pa.int64()), "double": (float, pa.float64()),
+               "boolean": (bool, pa.bool_()), "string": (str, pa.string())}
+
+
+def _to_arrow(rows: list[list], schema: T.StructType) -> pa.Table:
+    """Cast each cell to its column's inferred type (blanks stay null)
+    and build one Arrow table, column by column."""
+    arrays = []
+    for i, f in enumerate(schema.fields):
+        cast, arrow_type = _CELL_TYPES[f.dataType.typeName()]
+        arrays.append(pa.array([None if r[i] is None else cast(r[i]) for r in rows],
+                               type=arrow_type))
+    return pa.Table.from_arrays(arrays, names=[f.name for f in schema.fields])
 
 
 def read_excel_sheet(spark: SparkSession, path: str, sheet: str | int = 0) -> DataFrame:
     """Driver-side read of one sheet → Spark DataFrame, schema inferred
     (int64/double/bool/string, blanks null), matching the effective
     inference of the reference's ``pd.read_excel`` on its shipped data
-    (SURVEY §1.3)."""
+    (SURVEY §1.3).  The frame is a JVM-resident local relation built
+    from one Arrow table, so scanning it runs no Python worker."""
     cols, rows = xlsx_io.read_sheet(path, sheet)
     schema = _to_schema(cols, rows)
-    return spark.createDataFrame(_coerce(rows, schema), schema)
+    return spark.createDataFrame(_to_arrow(rows, schema), schema)
 
 
 def read_excel_dir_distributed(spark: SparkSession, path_glob: str,

@@ -3,10 +3,12 @@ provenance, horizontal positional concat (incl. the ragged-length
 null-padding case), and the per-match column prefix."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
+from etl_excel_to_hyper_tableau_spark.operators import combinators
 from etl_excel_to_hyper_tableau_spark.operators.combinators import (
-    horizontal_concat, pivot_union, prefix_columns, with_row_index,
+    horizontal_concat, pivot_union, prefix_columns,
 )
 
 
@@ -40,13 +42,6 @@ def test_pivot_union_unions_by_name(spark):
     assert rows == {("x", "a", 1), ("y", "b", 2)}
 
 
-def test_with_row_index_is_dense_and_order_preserving(spark):
-    df = spark.range(0, 100).repartition(7)  # multi-partition on purpose
-    out = with_row_index(df, "rid")
-    ids = [r["rid"] for r in out.collect()]
-    assert sorted(ids) == list(range(100))
-
-
 def test_horizontal_concat_matches_pandas(spark):
     d1 = spark.createDataFrame([(1,), (2,), (3,)], "a int")
     d2 = spark.createDataFrame([("x",), ("y",), ("z",)], "b string")
@@ -71,3 +66,40 @@ def test_horizontal_concat_ragged_null_pads(spark):
 def test_horizontal_concat_single_input_passthrough(spark):
     d = spark.createDataFrame([(1,)], "a int")
     assert horizontal_concat([d]) is d
+
+
+def test_horizontal_concat_keeps_input_types_when_null_padded(spark):
+    d1 = spark.createDataFrame([(1,)], "a long")  # shorter side → padded
+    d2 = spark.createDataFrame([("x", 1.5), ("y", 2.5)], "b string, c double")
+    out = horizontal_concat([d1, d2])
+    assert out.schema.simpleString() == "struct<a:bigint,b:string,c:double>"
+    assert [tuple(r) for r in out.collect()] == [(1, "x", 1.5), (None, "y", 2.5)]
+
+
+def test_horizontal_concat_keeps_positional_order_across_partitions(spark):
+    d1 = spark.range(0, 50, numPartitions=4).select(F.col("id").alias("a"))
+    d2 = spark.range(100, 140, numPartitions=3).select(F.col("id").alias("b"))
+    rows = [tuple(r) for r in horizontal_concat([d1, d2]).collect()]
+    assert rows == [(i, 100 + i if i < 40 else None) for i in range(50)]
+
+
+def test_horizontal_concat_allows_duplicate_column_names(spark):
+    d1 = spark.createDataFrame([(1, "p")], "a long, b string")
+    d2 = spark.createDataFrame([(2,), (3,)], "a long")
+    out = horizontal_concat([d1, d2])
+    assert out.columns == ["a", "b", "a"]
+    assert [tuple(r) for r in out.collect()] == [(1, "p", 2), (None, None, 3)]
+
+
+def test_horizontal_concat_refuses_inputs_over_row_cap(spark, monkeypatch):
+    monkeypatch.setattr(combinators, "MAX_CONCAT_ROWS", 4)
+    d = spark.range(3).select(F.col("id").alias("a"))
+    with pytest.raises(ValueError, match="exceed 4 rows"):
+        horizontal_concat([d, d])
+
+
+def test_horizontal_concat_default_cap_matches_excel_sink():
+    import inspect
+    from etl_excel_to_hyper_tableau_spark.sinks.excel import write_excel
+    cap = inspect.signature(write_excel).parameters["max_rows"].default
+    assert combinators.MAX_CONCAT_ROWS == cap == 1_000_000

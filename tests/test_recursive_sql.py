@@ -62,3 +62,16 @@ def test_multi_cte_union_distinct_pointed_error(spark):
     assert is_recursive_union(sql)
     with pytest.raises(NotImplementedError, match="recursive_fixpoint"):
         run_recursive_union_sql(spark, sql)
+
+
+def test_union_distinct_leaves_no_temp_view(spark):
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "s long, d long") \
+         .createOrReplaceTempView("edges_t")
+    before = views()
+    out = run_recursive_union_sql(spark, CYCLE_UNION)
+    assert views() == before
+    # the returned frame is resolved already: it still runs after the drop
+    assert [r["n"] for r in out.collect()] == [1, 2, 3]

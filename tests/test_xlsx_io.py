@@ -58,6 +58,37 @@ def test_read_excel_sheet_schema_inference(spark, sample_xlsx):
     assert df.filter("name IS NULL").count() == 1
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_read_excel_sheet_stages_a_local_relation(spark, sample_xlsx):
+    df = read_excel_sheet(spark, sample_xlsx, "Sheet1")
+    plan = _executed_plan(df)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    df.createOrReplaceTempView("staged_t")
+    try:
+        q = spark.sql("SELECT ok, SUM(qty) AS q FROM staged_t GROUP BY ok")
+        assert "ExistingRDD" not in _executed_plan(q)
+        assert {tuple(r) for r in q.collect()} == {(True, 4), (False, 7)}
+    finally:
+        spark.catalog.dropTempView("staged_t")
+
+
+def test_read_excel_sheet_header_only_sheet(spark, tmp_path):
+    p = str(tmp_path / "empty.xlsx")
+    xlsx_io.write_workbook(p, [("Sheet1", ["a", "b"], [])])
+    df = read_excel_sheet(spark, p, "Sheet1")
+    assert df.columns == ["a", "b"]
+    assert "LocalTableScan" in _executed_plan(df)
+    df.createOrReplaceTempView("empty_t")
+    try:
+        assert spark.sql("SELECT a, COUNT(*) FROM empty_t GROUP BY a").collect() == []
+        assert spark.sql("SELECT COUNT(*) AS n FROM empty_t").first()["n"] == 0
+    finally:
+        spark.catalog.dropTempView("empty_t")
+
+
 def test_distributed_excel_scan(spark, tmp_path):
     # many-files parallelism: binaryFile + mapInPandas (SURVEY §7.4-4)
     for i in range(3):

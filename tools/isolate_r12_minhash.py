@@ -9,7 +9,7 @@ labels (§1.5):
      regression reproducible outside the bench process at all?
   B. compute-only wall (noop sink, no 2.16 M-row toPandas) — splits the
      operator from the bench's materialization action;
-  C. bench-context replay: run the 12 HEADLINE entries that precede
+  C. bench-context replay: run the 11 HEADLINE entries that precede
      minhash_candidates first (cold+warm, same as bench.py), then time
      it — isolates accumulated-session state (persisted sigs tables,
      JVM heap/GC, codegen cache) from the operator itself.
