@@ -26,7 +26,7 @@ from pyspark.errors.exceptions.captured import AnalysisException
 from .bundles import Query, QueryBundle
 from .operators.combinators import horizontal_concat, pivot_union, prefix_columns
 from .plans.dialect import rewrite_bare_column, sqlite_to_spark
-from .plans.macro import format_query, sql_table_name
+from .plans.macro import format_query
 from .plans.recursive import is_recursive_union, run_recursive_union_sql
 from .sinks.excel import write_excel
 from .sinks.hyper import write_hyper
@@ -38,27 +38,17 @@ from .sources.registry import discover_files, register_sheet, resolve_match, unr
 class QueryEngine:
     """Run QueryBundles over a directory of Excel inputs.
 
-    ``dialect="sqlite"`` applies the SQLite→Spark shim to every query
-    before execution (default: the reference's contract);
-    ``dialect="spark"`` passes SQL through untouched.
+    Every query is written in the reference's SQLite dialect and goes
+    through the SQLite→Spark shim (:func:`sqlite_to_spark`) before
+    execution.
     """
 
     def __init__(self, spark: SparkSession, directory: str,
-                 bundles: list[QueryBundle], export_dir: str,
-                 dialect: str = "sqlite",
-                 stage_format: str = "memory",
-                 stage_dir: str | None = None):
+                 bundles: list[QueryBundle], export_dir: str):
         self.spark = spark
         self.directory = directory
         self.bundles = bundles
         self.export_dir = export_dir.rstrip("/")
-        if dialect not in {"sqlite", "spark"}:
-            raise ValueError(f"unknown dialect {dialect!r}")
-        if stage_format not in {"memory", "parquet"}:
-            raise ValueError(f"unknown stage_format {stage_format!r}")
-        self.dialect = dialect
-        self.stage_format = stage_format
-        self.stage_dir = (stage_dir or f"{self.export_dir}/__stage__").rstrip("/")
         self._registered: list[str] = []
 
     # -- stages -----------------------------------------------------------
@@ -80,46 +70,27 @@ class QueryEngine:
         """Load each (file, sheet) once and register it as a temp view
         (reference A7; SQLite staging replaced by the Catalyst catalog).
 
-        ``stage_format="memory"`` (default) registers the sheet as a
-        JVM-resident local relation built from one Arrow table
-        (:func:`read_excel_sheet`): every query's scan of it is a
+        Each sheet is a JVM-resident local relation built from one Arrow
+        table (:func:`read_excel_sheet`): every query's scan of it is a
         ``LocalTableScan``, with no Python worker and no I/O.
-        ``stage_format="parquet"`` additionally writes each sheet to
-        ``stage_dir`` and registers the parquet read instead of the
-        in-memory frame — the scale path: xlsx (zipped XML, not
-        splittable, no pushdown) is parsed ONCE, and every query then
-        scans columnar parquet with predicate pushdown and column
-        pruning (``PushedFilters``/``ReadSchema`` reach the scan; the
-        plan-property test pins this).  This is the "parse once, query
-        Parquet" layout SCALING.md prescribes for 100 TB workbook
-        ingest; "memory" (default) skips the I/O round-trip for
-        reference-sized inputs.
         """
         for file_name, sheet in pairs:
             df = read_excel_sheet(self.spark, f"{self.directory}/{file_name}", sheet)
-            if self.stage_format == "parquet":
-                name = sql_table_name(file_name, sheet)
-                path = f"{self.stage_dir}/{name}"
-                df.write.mode("overwrite").parquet(path)
-                df = self.spark.read.parquet(path)
             self._registered.append(
                 register_sheet(self.spark, df, file_name, sheet))
 
     def run_query(self, query: Query, file_name: str) -> DataFrame:
-        """Rewrite (.sheet macro + dialect shim) and execute one
+        """Rewrite (.sheet macro + SQLite shim) and execute one
         (query, file) pair.
 
         SQLite permits bare (non-grouped, non-aggregated) select items in
         aggregate queries — an arbitrary in-group row's value is taken
-        (SURVEY §2C).  Spark rejects these at analysis; in sqlite dialect
-        each such item is wrapped in ``any_value`` and retried, using
-        Catalyst's MISSING_AGGREGATION error itself to identify the bare
-        columns instead of reimplementing the analyzer's grouping check.
+        (SURVEY §2C).  Spark rejects these at analysis; each such item is
+        wrapped in ``any_value`` and retried, using Catalyst's
+        MISSING_AGGREGATION error itself to identify the bare columns
+        instead of reimplementing the analyzer's grouping check.
         """
-        sql = format_query(query.sql, file_name)
-        if self.dialect != "sqlite":
-            return self.spark.sql(sql)
-        sql = sqlite_to_spark(sql)
+        sql = sqlite_to_spark(format_query(query.sql, file_name))
         # WITH RECURSIVE … UNION ALL runs natively on Spark 4.1; the
         # UNION-distinct form (SQLite's cyclic-closure idiom) does not —
         # route it through the iterative-fixpoint evaluator

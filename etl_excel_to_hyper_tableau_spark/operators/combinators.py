@@ -31,7 +31,8 @@ from ..plans.macro import strip_extension
 
 _ORD, _POS = "__hconcat_ord__", "__hconcat_pos__"
 
-# the row cap the Excel sink applies; a concat collects on the driver
+# the driver-collect row cap: a concat collects its inputs on the driver,
+# and the Excel sink (sinks/excel.py) collects each result under the same cap
 MAX_CONCAT_ROWS = 1_000_000
 
 

@@ -970,7 +970,7 @@ def cluster_representatives(df: DataFrame, text_col: str, id_col: str,
 # ---------------------------------------------------------------------------
 
 def _segment_windows(seg_tokens: int):
-    """Shared window builder: cut a LAMBDA-BOUND token array into
+    """Window builder: cut a LAMBDA-BOUND token array into
     consecutive ``seg_tokens``-sized segment strings.
 
     The token array must be a materialized higher-order-function
@@ -991,7 +991,7 @@ def _segment_windows(seg_tokens: int):
 
 
 def segment_dedup(df: DataFrame, text_col: str, id_col: str,
-                  seg_tokens: int = 10, impl: str = "text") -> DataFrame:
+                  seg_tokens: int = 10) -> DataFrame:
     """Remove passages repeated across the corpus, keeping the first
     occurrence — the chunk-approximated form of exact-substring
     deduplication (Lee et al., "Deduplicating Training Data Makes
@@ -1005,118 +1005,30 @@ def segment_dedup(df: DataFrame, text_col: str, id_col: str,
     dropped, and each document is re-assembled from its surviving
     segments in order.
 
-    Two value-identical implementations (round-11 measured trade):
+    Election: ``groupBy(md5(segment))`` + ``min(struct)`` — partial
+    aggregation combines map-side, so a segment duplicated a million
+    times ships ONE row per input partition into the exchange; a window
+    ``rank() OVER (PARTITION BY segment)`` formulation would ship all
+    copies to one reducer (skew).  The winner struct CARRIES the
+    segment text, so the election output is row-for-row the kept set
+    with no join back; ``(id, seg_idx)`` is unique per occurrence, so
+    appending ``seg`` to the min-struct cannot change the winner.  The
+    corpus text crosses two exchanges (election, per-document rebuild).
 
-    * ``impl='text'`` (default, the measured-faster form on this
-      single-node bench): the election winner struct CARRIES the
-      segment text, so the election output is row-for-row the kept set
-      with no join back — see :func:`_segment_dedup_textcarry`.
-    * ``impl='digest'``: NO exchange ever carries segment text — the
-      explode emits only ``(id, seg_idx, md5(seg))``, the election and
-      per-doc winner collapse move digests/ints, and the kept indices
-      are re-attached to the documents with ONE join (the only
-      text-carrying exchange), each document re-deriving its surviving
-      segments locally by re-slicing its own token array.  **Measured
-      SLOWER at sf1 on local[32]** (guide §1.2 negative result, round
-      11): interleaved full-entry 3.9-4.7 s vs 3.1-3.7 s for the text
-      form; component attribution put the regression in the re-attach
-      join (+0.7 s — it shuffles the document text) while the
-      text-carrying election costs only ~0.1 s more than the digest
-      election (local shuffles of lz4 text are nearly free, so cutting
-      exchange bytes buys nothing here and the extra join + second
-      tokenize+slice pass is pure cost).  On a network-bound cluster
-      the trade reverses — the digest form moves ~seg_tokens× fewer
-      exchange bytes — which is why the path is kept and parity-tested
-      rather than deleted; flipping the default is a one-word change
-      once a measurement on such a cluster justifies it.
-
-    Election shape shared by both paths: ``groupBy(digest)`` +
-    ``min(struct)`` — partial aggregation combines map-side, so a
-    segment duplicated a million times ships ONE row per input
-    partition into the exchange; a window ``rank() OVER (PARTITION BY
-    segment)`` formulation would ship all copies to one reducer (skew).
+    A digest-only form (election over ``(id, seg_idx, md5)``, kept
+    indices re-attached to the documents with one join and re-sliced
+    locally) moves ~``seg_tokens``× fewer exchange bytes but measured
+    SLOWER at sf1 on local[32] (round 11, interleaved full entry):
+    3.9-4.7 s vs 3.1-3.7 s for this form.  The re-attach join, which
+    shuffles the document text, cost +0.7 s, while carrying the text
+    through the election cost only ~0.1 s (local shuffles of lz4 text
+    are nearly free).  It was deleted; it can come back from history if
+    a network-bound cluster ever measures the other way.
 
     Output: ``doc_id, n_segments, n_kept, cleaned_text`` (one row per
     input document; fully-duplicated documents keep ``n_kept = 0`` and
     an empty string).
     """
-    if impl == "text":
-        return _segment_dedup_textcarry(df, text_col, id_col, seg_tokens)
-    if impl != "digest":
-        raise ValueError(f"unknown impl {impl!r}")
-    from .parallelism import spread
-    from .text import tokens
-
-    toks = tokens(F.col(text_col))
-    _segments = _segment_windows(seg_tokens)
-
-    seg_arr = F.element_at(F.transform(F.array(toks), _segments), 1)
-    segs = (spread(df).select(
-                F.col(id_col),
-                F.posexplode(seg_arr).alias("seg_idx", "seg"))
-            .where(F.col("seg") != "")
-            .select(F.col(id_col), "seg_idx",
-                    F.md5(F.col("seg")).alias("__dig__")))
-
-    # Election: corpus-wide first occurrence per digest.  (id, seg_idx)
-    # is unique per occurrence, so the min-struct winner is exactly the
-    # rank-1 row of the oracle's PARTITION BY seg election.
-    winners = (segs.groupBy("__dig__")
-               .agg(F.min(F.struct(F.col(id_col).alias("id"),
-                                   F.col("seg_idx").alias("seg_idx")))
-                     .alias("w"))
-               .select(F.col("w.id").alias(id_col),
-                       F.col("w.seg_idx").alias("seg_idx")))
-
-    kept_idx = (winners.groupBy(id_col)
-                .agg(F.sort_array(F.collect_list("seg_idx"))
-                      .alias("__kept__")))
-
-    # Re-attach and rebuild: one text-carrying exchange (the join),
-    # then a per-row local re-slice.  The token array is bound ONCE as
-    # a lambda variable (see _segment_windows) so n_segments and every
-    # kept-segment slice read the same materialized array.
-    ki = F.coalesce(F.col("__kept__"),
-                    F.array().cast("array<int>"))
-
-    def _finish(ts):
-        return F.struct(
-            F.greatest(F.ceil(F.size(ts) / F.lit(seg_tokens)),
-                       F.lit(1)).cast("long").alias("n_segments"),
-            F.concat_ws(
-                " ",
-                F.transform(ki, lambda i: F.concat_ws(
-                    " ", F.slice(ts, i * seg_tokens + 1, seg_tokens))))
-             .alias("cleaned_text"))
-
-    fin = F.element_at(F.transform(F.array(toks), _finish), 1)
-    n_kept = F.when(F.col("__kept__").isNull(), F.lit(0)) \
-              .otherwise(F.size(F.col("__kept__"))).cast("long")
-    # spread AFTER the join: when the planner broadcasts kept_idx the
-    # join output inherits the scan's (possibly single-file) layout and
-    # the rebuild would run one-task; when it shuffle-joins, the output
-    # already has shuffle-partition parallelism and spread is a no-op —
-    # spreading df BEFORE the join would instead add a second
-    # text-carrying exchange in that case.
-    return (spread(df.select(id_col, text_col)
-                   .join(kept_idx, id_col, "left"))
-            .select(F.col(id_col), fin.alias("__f__"), n_kept.alias("n_kept"))
-            .select(id_col,
-                    F.col("__f__.n_segments").alias("n_segments"),
-                    "n_kept",
-                    F.col("__f__.cleaned_text").alias("cleaned_text")))
-
-
-def _segment_dedup_textcarry(df: DataFrame, text_col: str, id_col: str,
-                             seg_tokens: int = 10) -> DataFrame:
-    """The default (measured-faster on local[32]) form: the election
-    winner struct CARRIES the segment text, so the election output is
-    row-for-row the kept set with no join back.  The corpus text
-    crosses two exchanges (election, per-document rebuild) — cheap
-    locally, the candidate cost on a network-bound cluster (see the
-    ``impl`` discussion on :func:`segment_dedup`).  ``(id, seg_idx)``
-    is unique per occurrence, so appending ``seg`` to the min-struct
-    cannot change the winner."""
     from .parallelism import spread
     from .text import tokens
 
@@ -1130,9 +1042,6 @@ def _segment_dedup_textcarry(df: DataFrame, text_col: str, id_col: str,
             .where(F.col("seg") != ""))
     segs = segs.withColumn("__dig__", F.md5(F.col("seg")))
 
-    # Election output == kept set (winner struct carries the text);
-    # appending `seg` to the min-struct cannot change the winner
-    # because (id, seg_idx) is unique per occurrence.
     kept = (segs.groupBy("__dig__")
             .agg(F.min(F.struct(F.col(id_col).alias("id"),
                                 F.col("seg_idx").alias("seg_idx"),

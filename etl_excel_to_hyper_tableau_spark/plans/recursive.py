@@ -2,7 +2,7 @@
 Spark's recursive CTEs (SURVEY §2C).
 
 Spark 4.1 executes ``WITH RECURSIVE … UNION ALL`` natively (the
-engine's sqlite dialect passes it straight through), but rejects the
+engine passes it straight through ``spark.sql``), but rejects the
 ``UNION``-distinct form with ``UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE``
 — and the distinct form is exactly the one SQLite users write for
 graph closures, where dedup is what makes cyclic recursion terminate.
@@ -37,8 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 def recursive_fixpoint(base: DataFrame,
                        step: Callable[[DataFrame], DataFrame],
-                       max_iterations: int = 100,
-                       checkpoint_every: int = 1) -> DataFrame:
+                       max_iterations: int = 100) -> DataFrame:
     """UNION-semantics recursive CTE: ``WITH RECURSIVE r AS (base UNION
     step(r)) SELECT * FROM r`` — except ``step`` receives only the
     previous round's *new* rows (the standard's working table), which is
@@ -56,7 +55,7 @@ def recursive_fixpoint(base: DataFrame,
     acc = base.localCheckpoint(eager=True)
     frontier = acc
     base_shape = [(f.name, f.dataType) for f in base.schema.fields]
-    for i in range(max_iterations):
+    for _ in range(max_iterations):
         new = step(frontier)
         # compare (name, type) — nullability legitimately differs between
         # a checkpointed base and a freshly-analyzed step output
@@ -64,9 +63,7 @@ def recursive_fixpoint(base: DataFrame,
             raise ValueError(
                 f"step changed the schema: {new.schema.simpleString()} != "
                 f"{base.schema.simpleString()}")
-        new = new.exceptAll(acc).distinct()
-        if checkpoint_every and i % checkpoint_every == 0:
-            new = new.localCheckpoint(eager=True)
+        new = new.exceptAll(acc).distinct().localCheckpoint(eager=True)
         if new.isEmpty():
             return acc
         acc = acc.unionByName(new).localCheckpoint(eager=True)
@@ -151,10 +148,14 @@ def run_recursive_union_sql(spark: SparkSession, sql: str,
     rows (registered as a temp view in place of the CTE name), and the
     main query runs over the accumulated fixpoint.  Dedup across rounds
     is what makes cyclic graphs terminate — the semantics SQLite users
-    rely on for closures."""
+    rely on for closures.  The UNION ALL form raises ``ValueError``:
+    ``spark.sql`` runs it natively."""
     p = _parse_recursive(sql)
     if p is None or p["union_all"] is None:
         raise ValueError("not a recursive WITH RECURSIVE statement")
+    if p["union_all"]:
+        raise ValueError("WITH RECURSIVE … UNION ALL runs natively through "
+                         "spark.sql; this evaluator takes the UNION-distinct form")
     if p["multi_cte"]:
         raise NotImplementedError(
             "WITH RECURSIVE (UNION-distinct) with additional CTEs is not "
@@ -163,9 +164,6 @@ def run_recursive_union_sql(spark: SparkSession, sql: str,
             "DataFrames")
     name, cols = p["name"], p["cols"]
     base_sql, step_sql, main_sql = p["base_sql"], p["step_sql"], p["main_sql"]
-    if p["union_all"]:
-        # Spark runs this natively; no driver loop needed
-        return spark.sql(sql)
 
     tag = uuid.uuid4().hex[:8]
     frontier_view = f"__rec_frontier_{name}_{tag}"

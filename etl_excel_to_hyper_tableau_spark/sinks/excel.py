@@ -5,8 +5,9 @@ Inherently a driver-side single-file write (xlsx is unsplittable);
 results are collected via Arrow (``toPandas``) — appropriate because
 exports are post-aggregation result sets, which are small by
 construction.  Large-frame exports should use the parquet sink instead;
-this sink refuses frames above ``max_rows`` rather than silently OOMing
-the driver.
+this sink refuses frames above ``MAX_CONCAT_ROWS``, the driver-collect
+row cap it shares with the horizontal concat, rather than silently
+OOMing the driver.
 """
 
 from __future__ import annotations
@@ -15,11 +16,11 @@ import os
 
 from pyspark.sql import DataFrame
 
+from ..operators.combinators import MAX_CONCAT_ROWS
 from ..sources import xlsx_io
 
 
-def write_excel(path: str, results: list[tuple[str, DataFrame]],
-                max_rows: int = 1_000_000) -> str:
+def write_excel(path: str, results: list[tuple[str, DataFrame]]) -> str:
     """Write ``[(sheet_name, df), ...]`` to one ``.xlsx`` file.
 
     Pre-deletes an existing file (reference query_iterator.py:50-54) and
@@ -32,10 +33,10 @@ def write_excel(path: str, results: list[tuple[str, DataFrame]],
         os.remove(path)
     sheets = []
     for name, df in results:
-        pdf = df.limit(max_rows + 1).toPandas()
-        if len(pdf) > max_rows:
+        pdf = df.limit(MAX_CONCAT_ROWS + 1).toPandas()
+        if len(pdf) > MAX_CONCAT_ROWS:
             raise ValueError(
-                f"result {name!r} exceeds {max_rows} rows; use the parquet sink")
+                f"result {name!r} exceeds {MAX_CONCAT_ROWS} rows; use the parquet sink")
         # object dtype first so nulls stay None (a float column would turn
         # them back into NaN), then undo pandas' int→float widening for
         # integer-typed Spark columns that picked up nulls

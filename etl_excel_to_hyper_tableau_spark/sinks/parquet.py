@@ -22,16 +22,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_parquet(path: str, results: list[tuple[str, DataFrame]],
-                  mode: str = "overwrite",
-                  partition_by: dict[str, list[str]] | None = None) -> str:
-    partition_by = partition_by or {}
+def write_parquet(path: str, results: list[tuple[str, DataFrame]]) -> str:
     for name, df in results:
-        writer = df.write.mode(mode)
-        cols = partition_by.get(name)
-        if cols:
-            writer = writer.partitionBy(*cols)
-        writer.parquet(f"{path.rstrip('/')}/{name}")
+        df.write.mode("overwrite").parquet(f"{path.rstrip('/')}/{name}")
     return path
 
 

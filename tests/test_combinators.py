@@ -97,9 +97,3 @@ def test_horizontal_concat_refuses_inputs_over_row_cap(spark, monkeypatch):
     with pytest.raises(ValueError, match="exceed 4 rows"):
         horizontal_concat([d, d])
 
-
-def test_horizontal_concat_default_cap_matches_excel_sink():
-    import inspect
-    from etl_excel_to_hyper_tableau_spark.sinks.excel import write_excel
-    cap = inspect.signature(write_excel).parameters["max_rows"].default
-    assert combinators.MAX_CONCAT_ROWS == cap == 1_000_000

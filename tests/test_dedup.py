@@ -238,32 +238,6 @@ def test_segment_dedup_reassembles_in_order(spark):
     assert row["n_segments"] == 4 and row["n_kept"] == 4
 
 
-def test_segment_dedup_digest_impl_matches_text_impl(spark):
-    # round 11: the digest-only election (impl='digest' — no exchange
-    # carries segment text; kept indices re-attached with one join and
-    # segments re-derived by re-slicing the token array) must be
-    # value-identical to the text-carrying default on every edge the
-    # fixture exercises: aligned repeats, fully-deduplicated docs,
-    # partial final windows, empty docs.
-    from etl_excel_to_hyper_tableau_spark.operators.dedup import segment_dedup
-
-    docs = _seg_docs(spark)
-    text = sorted(map(tuple, segment_dedup(
-        docs, "text", "doc_id", seg_tokens=10, impl="text").collect()))
-    digest = sorted(map(tuple, segment_dedup(
-        docs, "text", "doc_id", seg_tokens=10, impl="digest").collect()))
-    assert text == digest
-    # null text and whitespace-only docs behave identically too
-    extra = spark.createDataFrame(
-        [(10, None), (11, "   "), (12, "a b c d e f g h i j k")],
-        "doc_id long, text string")
-    t2 = sorted(map(tuple, segment_dedup(
-        extra, "text", "doc_id", seg_tokens=10, impl="text").collect()))
-    d2 = sorted(map(tuple, segment_dedup(
-        extra, "text", "doc_id", seg_tokens=10, impl="digest").collect()))
-    assert t2 == d2
-
-
 def test_minhash_incremental_rejects_nondividing_bands(spark):
     import pytest
     from etl_excel_to_hyper_tableau_spark.operators.dedup import (

@@ -1,54 +1,5 @@
-"""Parquet staging mode: same results as in-memory staging, and queries
-scan parquet with pushdown (the parse-once-query-parquet scale layout)."""
-
-import contextlib
-import io
-
-from etl_excel_to_hyper_tableau_spark.bundles import Query, QueryBundle
-from etl_excel_to_hyper_tableau_spark.engine import QueryEngine
-from etl_excel_to_hyper_tableau_spark.sources import xlsx_io
-
-
-def _mk_inputs(d):
-    rows = [[i, "grp%d" % (i % 3), i * 1.5] for i in range(60)]
-    xlsx_io.write_workbook(f"{d}/data.xlsx",
-                           [("Sheet1", ["id", "grp", "val"], rows)])
-
-
-def _run(spark, d, out, stage_format):
-    b = QueryBundle.from_strings(
-        "o", "excel", ["data"], ["Sheet1"],
-        ["SELECT grp, COUNT(id) AS n FROM Sheet1.sheet "
-         "WHERE id > 10 GROUP BY grp"], ["q"])
-    eng = QueryEngine(spark, d, [b], out, stage_format=stage_format)
-    match_map = eng.match_files()
-    eng.stage(eng.distinct_sheets(match_map))
-    try:
-        df = eng.run_query(b.queries[0], match_map["data"])
-        rows = sorted(tuple(r) for r in df.collect())
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        return rows, buf.getvalue()
-    finally:
-        from etl_excel_to_hyper_tableau_spark.sources.registry import unregister_all
-        unregister_all(spark, eng._registered)
-        eng._registered.clear()
-
-
-def test_parquet_staging_matches_memory_and_pushes_down(spark, tmp_path):
-    d = str(tmp_path / "in")
-    import os
-    os.makedirs(d)
-    _mk_inputs(d)
-    mem_rows, mem_plan = _run(spark, d, str(tmp_path / "o1"), "memory")
-    pq_rows, pq_plan = _run(spark, d, str(tmp_path / "o2"), "parquet")
-    assert pq_rows == mem_rows
-    # the filter reaches the parquet scan, and only the queried columns
-    # are read — the properties xlsx scans cannot give
-    assert "Scan parquet" in pq_plan
-    assert "PushedFilters: [IsNotNull(id), GreaterThan(id,10)]" in pq_plan
-    assert "id" in pq_plan and "val" not in pq_plan.split("ReadSchema")[1][:120]
+"""Parquet layout tools: compaction, Z-order keys, quantile buckets
+and partition pruning."""
 
 
 def test_compact_parquet_merges_small_files(spark, tmp_path):

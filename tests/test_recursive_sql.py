@@ -62,6 +62,9 @@ def test_multi_cte_union_distinct_pointed_error(spark):
     assert is_recursive_union(sql)
     with pytest.raises(NotImplementedError, match="recursive_fixpoint"):
         run_recursive_union_sql(spark, sql)
+    # UNION ALL runs natively through spark.sql; the evaluator refuses it
+    with pytest.raises(ValueError, match="UNION ALL"):
+        run_recursive_union_sql(spark, COUNTER_ALL)
 
 
 def test_union_distinct_leaves_no_temp_view(spark):

@@ -4,9 +4,7 @@ import pytest
 from pyspark.sql import types as T
 
 from etl_excel_to_hyper_tableau_spark.sources import xlsx_io
-from etl_excel_to_hyper_tableau_spark.sources.excel import (
-    read_excel_dir_distributed, read_excel_sheet,
-)
+from etl_excel_to_hyper_tableau_spark.sources.excel import read_excel_sheet
 
 
 @pytest.fixture()
@@ -89,53 +87,13 @@ def test_read_excel_sheet_header_only_sheet(spark, tmp_path):
         spark.catalog.dropTempView("empty_t")
 
 
-def test_distributed_excel_scan(spark, tmp_path):
-    # many-files parallelism: binaryFile + mapInPandas (SURVEY §7.4-4)
-    for i in range(3):
-        xlsx_io.write_workbook(str(tmp_path / f"part{i}.xlsx"),
-                               [("Sheet1", ["a", "b"], [[i, f"row{i}"]])])
-    schema = T.StructType([T.StructField("a", T.LongType()),
-                           T.StructField("b", T.StringType())])
-    df = read_excel_dir_distributed(spark, str(tmp_path / "*.xlsx"),
-                                    "Sheet1", schema)
-    rows = df.collect()
-    assert len(rows) == 3
-    assert {r["a"] for r in rows} == {0, 1, 2}
-    # lineage column present and populated
-    assert all(r["source_file"].endswith(".xlsx") for r in rows)
-
-
-def test_distributed_excel_schema_merge_reconciliation(spark, tmp_path):
-    """SURVEY §7.4 risk 4 / VERDICT r4 #8: per-file inference over
-    heterogeneous workbooks must reconcile driver-side — numeric
-    widening where lossless, string fallback on true conflicts — and
-    the distributed parser must coerce each file's cells to the merged
-    schema instead of crashing the Arrow conversion."""
-    from etl_excel_to_hyper_tableau_spark.sources.excel import (
-        merge_excel_schemas, read_excel_sheet,
-    )
-    # file 0: a=int, b=int, only in file 0: c
-    xlsx_io.write_workbook(str(tmp_path / "f0.xlsx"),
-                           [("Sheet1", ["a", "b", "c"],
-                             [[1, 10, "x"], [2, 20, "y"]])])
-    # file 1: a=string (conflict → string fallback), b=float (→ double)
-    xlsx_io.write_workbook(str(tmp_path / "f1.xlsx"),
-                           [("Sheet1", ["a", "b"],
-                             [["one", 1.5], ["two", 2.5]])])
-    inferred = [read_excel_sheet(spark, str(tmp_path / f"f{i}.xlsx"),
-                                 "Sheet1").schema for i in range(2)]
-    merged = merge_excel_schemas(inferred)
-    by_name = {f.name: type(f.dataType) for f in merged.fields}
-    assert by_name == {"a": T.StringType, "b": T.DoubleType,
-                      "c": T.StringType}
-    df = read_excel_dir_distributed(spark, str(tmp_path / "*.xlsx"),
-                                    "Sheet1", merged)
-    rows = sorted(df.collect(), key=lambda r: r["source_file"])
-    assert len(rows) == 4
-    # ints under the string-fallback column render as strings
-    assert {r["a"] for r in rows} == {"1", "2", "one", "two"}
-    # ints under the widened double column render as doubles
-    assert sorted(r["b"] for r in rows) == [1.5, 2.5, 10.0, 20.0]
-    # file-local missing column -> null
-    assert [r["c"] for r in rows if r["source_file"].endswith("f1.xlsx")] \
-        == [None, None]
+def test_read_excel_sheet_infers_types_from_every_row(spark, tmp_path):
+    # a column's first 1,000 cells are ints; the cell after them decides
+    # the type, and every value must come back exact
+    p = str(tmp_path / "late.xlsx")
+    rows = [[i, i] for i in range(1000)] + [[2.5, "n/a"]]
+    xlsx_io.write_workbook(p, [("Sheet1", ["x", "y"], rows)])
+    df = read_excel_sheet(spark, p, "Sheet1")
+    assert df.schema.simpleString() == "struct<x:double,y:string>"
+    got = [tuple(r) for r in df.collect()]
+    assert got == [(float(i), str(i)) for i in range(1000)] + [(2.5, "n/a")]

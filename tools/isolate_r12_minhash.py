@@ -52,10 +52,12 @@ def main() -> None:
 
     def wall_topandas(tag):
         for run in ("cold", "warm"):
+            sc.setJobDescription(f"minhash_candidates toPandas {tag} {run}")
             t0 = time.perf_counter()
             n = len(fn(spark, sf_dir).toPandas())
             print(f"{tag} {run}: {time.perf_counter() - t0:.3f}s ({n} rows)",
                   flush=True)
+            sc.setJobDescription(None)
 
     def wall_noop(tag):
         for run in ("cold", "warm"):
