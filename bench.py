@@ -198,15 +198,7 @@ def main() -> None:
     spark = get_spark(app_name="bench")
     qs = entry.queries()
 
-    # warmup: one tiny action so JVM/codegen startup is not billed to q1,
-    # plus a footer-only touch of each source so parquet reader/datasource
-    # initialization (a fixed cost, not query work) isn't billed either
-    spark.range(1000).selectExpr("sum(id)").collect()
-    for t in entry.TABLES:
-        try:
-            entry._t(spark, sf_dir, t).count()
-        except Exception:
-            pass
+    entry.warm_up(spark, sf_dir)
 
     cold: dict[str, float] = {}
     warm: dict[str, float] = {}

@@ -75,9 +75,14 @@ class QueryEngine:
         ``LocalTableScan``, with no Python worker and no I/O.
         """
         for file_name, sheet in pairs:
-            df = read_excel_sheet(self.spark, f"{self.directory}/{file_name}", sheet)
-            self._registered.append(
-                register_sheet(self.spark, df, file_name, sheet))
+            path = f"{self.directory}/{file_name}"
+            try:
+                df = read_excel_sheet(self.spark, path, sheet)
+                self._registered.append(
+                    register_sheet(self.spark, df, file_name, sheet))
+            except Exception as e:
+                e.add_note(f"while staging sheet {sheet!r} of {path}")
+                raise
 
     def run_query(self, query: Query, file_name: str) -> DataFrame:
         """Rewrite (.sheet macro + SQLite shim) and execute one
@@ -146,10 +151,15 @@ class QueryEngine:
             for bundle in self.bundles:
                 results: list[tuple[str, DataFrame]] = []
                 for query in bundle.queries:
-                    per_file = [
-                        (m, match_map[m], self.run_query(query, match_map[m]))
-                        for m in bundle.matches
-                    ]
+                    per_file = []
+                    for m in bundle.matches:
+                        try:
+                            df = self.run_query(query, match_map[m])
+                        except Exception as e:
+                            e.add_note(f"while running query {query.name!r} "
+                                       f"on {match_map[m]}")
+                            raise
+                        per_file.append((m, match_map[m], df))
                     bundle.queried_dfs_by_query_name[query.name] = [
                         (f, df) for _, f, df in per_file]
                     results.append((query.name, self.combine(bundle, query, per_file)))

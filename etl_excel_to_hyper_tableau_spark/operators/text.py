@@ -56,7 +56,7 @@ def word_token_count(col: Column) -> Column:
     Counts via ``translate`` deletion rather than ``regexp_replace``:
     bit-identical lengths (the deleted sets equal the regex classes
     [A-Za-z0-9] and [A-Za-z0-9\\s] exactly), measured 10.8× faster at
-    sf1 (2.82 s → 0.26 s isolated, tools/isolate_fertility.py) — the
+    sf1 (2.82 s → 0.26 s isolated, OPTIMIZATION_r11.md §9) — the
     regex path built a full result string per row per pass."""
     word_chars = (F.length(col) - F.length(F.translate(col, _ALNUM, "")))
     other = F.length(F.translate(col, _ALNUM + _JAVA_WS, ""))
@@ -1600,7 +1600,7 @@ def vocab_drift(df_a: DataFrame, df_b: DataFrame, text_col: str,
 
 
 def dup_ngram_stats(df: DataFrame, text_col: str, group_col: str,
-                    n: int = 8, impl: str = "sql") -> DataFrame:
+                    n: int = 8) -> DataFrame:
     """Corpus-level duplicate n-gram rate per group (the measurement
     behind Lee et al. 2022's "Deduplicating Training Data Makes
     Language Models Better" analysis): for each group (source,
@@ -1617,25 +1617,19 @@ def dup_ngram_stats(df: DataFrame, text_col: str, group_col: str,
     counts come out of the same aggregate (``sum``/``count`` over the
     per-gram rows), so the corpus is exploded exactly once.
 
-    ``impl``: ``"sql"`` (default) is the pure-Catalyst explode;
-    ``"arrow"`` is a ``mapInPandas`` kernel that pre-aggregates
-    (group, gram) counts per partition.  MEASURED EQUAL at sf1
-    (arrow 1.58 s vs sql 1.63 s, round 11) and the attribution shows
-    why: in-worker compute is 0.27 s — the wall is the corpus-sized
-    distinct exchange, because word-8-grams are ~100% unique (2.36 M
-    grams, 2.36 M distinct at sf1), so local pre-aggregation collapses
-    NOTHING and every gram must cross to its reducer exactly once on
-    either path.  That exchange is the operator's floor on any
-    multi-process engine; the SQL form stays default (no Python-worker
-    dependency, whole plan JVM-side).  Both paths produce identical
-    output (tests/test_arrow_kernels.py).
+    Why there is no Arrow (``mapInPandas``) form: one that pre-aggregated
+    (group, gram) counts per partition MEASURED EQUAL at sf1 (arrow
+    1.58 s vs sql 1.63 s, round 11) and the attribution shows why:
+    in-worker compute is 0.27 s — the wall is the corpus-sized distinct
+    exchange, because word-8-grams are ~100% unique (2.36 M grams,
+    2.36 M distinct at sf1), so local pre-aggregation collapses NOTHING
+    and every gram must cross to its reducer exactly once on either
+    path.  That exchange is the operator's floor on any multi-process
+    engine, so the one form is the pure-Catalyst plan (no Python-worker
+    dependency, whole plan JVM-side).
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    if impl == "arrow":
-        return _dup_ngram_stats_arrow(df, text_col, group_col, n)
-    if impl != "sql":
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
     toks = tokens(F.col(text_col))
 
     def _grams(ts):
@@ -1652,74 +1646,6 @@ def dup_ngram_stats(df: DataFrame, text_col: str, group_col: str,
                 .select(F.col(group_col).alias("grp"),
                         F.explode(grams).alias("gram"))
                 .groupBy("grp", "gram").agg(F.count(F.lit(1)).alias("cnt")))
-    return (per_gram.groupBy("grp")
-            .agg(F.sum("cnt").cast("long").alias("total_ngrams"),
-                 F.count(F.lit(1)).cast("long").alias("distinct_ngrams"))
-            .withColumn("dup_frac",
-                        F.lit(1.0) - F.col("distinct_ngrams")
-                        / F.col("total_ngrams").cast("double"))
-            .select(F.col("grp").alias(group_col), "total_ngrams",
-                    "distinct_ngrams", "dup_frac"))
-
-
-def _dup_ngram_stats_arrow(df: DataFrame, text_col: str, group_col: str,
-                           n: int, flush_at: int = 1 << 21) -> DataFrame:
-    """Arrow kernel for :func:`dup_ngram_stats`: per-partition
-    (group, gram) Counter → partial-count rows → the same
-    ``groupBy(grp, gram)`` merge and group-bounded final aggregate.
-    Cross-partition gram dedup stays in the Spark aggregate (a gram
-    seen in two partitions must count as ONE distinct), so the kernel
-    only moves the tokenize/join inner loop to Python.  The Counter
-    flushes at ``flush_at`` distinct grams — worst-case executor state
-    is bounded regardless of partition size; flushed duplicates merge
-    in the downstream aggregate.
-
-    Exchange representation: the FULL 16-byte md5 digest of each gram,
-    not the gram text — fixed-width binary keys cut the shuffle bytes
-    ~2-4× and hash-aggregate faster than variable-length strings.
-    Distinctness over md5-128 equals distinctness over the text unless
-    the corpus contains an md5 collision (probability ~n²/2^129 —
-    ~10^-26 at a trillion grams; the same full-hash-identity assumption
-    the exact-dedup family already makes).  ``impl="sql"`` remains the
-    collision-free reference."""
-    grp_type = df.schema[group_col].dataType.simpleString()
-    schema = f"grp {grp_type}, gram binary, cnt long"
-
-    def run(batches):
-        import hashlib
-        from collections import Counter
-
-        import pandas as pd
-
-        from ..functions.pykernels import py_tokens
-
-        md5 = hashlib.md5
-
-        def emit(c: Counter):
-            ks = list(c.keys())
-            return pd.DataFrame(
-                {"grp": [g for g, _ in ks],
-                 "gram": [m for _, m in ks],
-                 "cnt": [c[k] for k in ks]})
-
-        c: Counter = Counter()
-        for pdf in batches:
-            for g, t in zip(pdf["__g__"], pdf["__t__"]):
-                toks = py_tokens(t)
-                for i in range(len(toks) - (n - 1)):
-                    gram = " ".join(toks[i:i + n])
-                    c[(g, md5(gram.encode("utf-8")).digest())] += 1
-            if len(c) >= flush_at:
-                yield emit(c)
-                c = Counter()
-        if c:
-            yield emit(c)
-
-    per_gram = (spread(df)
-                .select(F.col(group_col).alias("__g__"),
-                        F.col(text_col).alias("__t__"))
-                .mapInPandas(run, schema)
-                .groupBy("grp", "gram").agg(F.sum("cnt").alias("cnt")))
     return (per_gram.groupBy("grp")
             .agg(F.sum("cnt").cast("long").alias("total_ngrams"),
                  F.count(F.lit(1)).cast("long").alias("distinct_ngrams"))

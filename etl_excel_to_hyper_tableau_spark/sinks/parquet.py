@@ -91,126 +91,3 @@ def compact_parquet(spark: SparkSession, in_dir: str, out_dir: str,
     return {"files_in": files_in, "bytes_in": bytes_in,
             "files_out": files_out, "partitions": parts}
 
-
-def zorder_key(cols: list, bits: int = 16):
-    """Z-order (Morton) clustering key for multi-column data skipping —
-    the Delta/Iceberg ``OPTIMIZE ZORDER BY`` primitive: each column is
-    rank-normalized to ``bits`` bits elsewhere (or passed raw if
-    already small-range), and the key interleaves the columns' bits so
-    sorting by it clusters rows that are close in EVERY dimension.
-    Parquet min/max stats per file then stay narrow for all the
-    z-ordered columns at once, where a lexicographic multi-column sort
-    narrows only the leading column's ranges.
-
-    Pure Catalyst bit arithmetic (shiftleft/shiftright/AND fold) — one
-    expression, no UDF.  Columns must be non-negative integers that fit
-    ``bits`` bits (rank/bucket upstream if not; at 100 TB the
-    normalization is an ntile-style bucket assignment).
-    """
-    from pyspark.sql import functions as F
-
-    n = len(cols)
-    if n < 2:
-        raise ValueError("zorder needs >= 2 columns")
-    if bits * n > 63:
-        # bit 63 is the long's sign bit (negative keys range-sort before
-        # everything, destroying the clustering) and shift counts >= 64
-        # wrap under the JVM's shift-count masking, silently colliding
-        # different columns' bits — refuse rather than corrupt
-        raise ValueError(
-            f"zorder key needs bits*len(cols) <= 63 (got {bits}*{n}); "
-            f"lower bits to <= {63 // n}")
-    terms = []
-    for b in range(bits):
-        for ci, c in enumerate(cols):
-            src_bit = F.call_function(
-                "shiftright", F.col(c).cast("long"), F.lit(b).cast("int")
-            ).bitwiseAND(F.lit(1).cast("long"))
-            terms.append(F.call_function(
-                "shiftleft", src_bit, F.lit(b * n + ci).cast("int")))
-    out = terms[0]
-    for t in terms[1:]:
-        out = out.bitwiseOR(t)
-    return out
-
-
-def stage_zordered(spark: SparkSession, in_dir: str, out_dir: str,
-                   zorder_by: list[str], bits: int = 16,
-                   target_file_mb: int = 512,
-                   partitions: int | None = None) -> dict:
-    """Compact + Z-ORDER a parquet directory: range-repartition and
-    sort by the Morton key of ``zorder_by`` so every output file covers
-    a tight hyper-rectangle of the z-ordered columns — range filters on
-    ANY of them prune files/row groups via parquet min/max stats.
-
-    The z-key is computed, sorted on, and dropped; data columns are
-    unchanged.  One range-exchange total (the same budget as
-    :func:`compact_parquet`'s round-robin).  Returns the same stats
-    dict plus ``zorder_by``.
-    """
-    if os.path.abspath(out_dir) == os.path.abspath(in_dir):
-        raise ValueError(
-            f"stage_zordered: out_dir must differ from in_dir ({in_dir})")
-    files_in, bytes_in = parquet_file_stats(in_dir)
-    parts = partitions or max(1, math.ceil(bytes_in / (target_file_mb << 20)))
-    # auto-fit the per-column bit budget to the int64 key (see
-    # zorder_key's sign-bit/shift-wrap guard): more columns → coarser
-    # per-column resolution, the standard z-order tradeoff
-    bits = min(bits, 63 // len(zorder_by))
-    df = (spark.read.parquet(in_dir)
-          .withColumn("__z__", zorder_key(zorder_by, bits=bits)))
-    (df.repartitionByRange(parts, "__z__")
-       .sortWithinPartitions("__z__")
-       .drop("__z__")
-       .write.mode("overwrite").parquet(out_dir))
-    files_out, _ = parquet_file_stats(out_dir)
-    return {"files_in": files_in, "bytes_in": bytes_in,
-            "files_out": files_out, "partitions": parts,
-            "zorder_by": list(zorder_by)}
-
-
-def quantile_buckets(df: DataFrame, col: str, bits: int = 16,
-                     relative_error: float = 0.001):
-    """Scale-safe rank normalization for :func:`zorder_key`: bucket a
-    numeric column of ANY distribution into ``2^bits`` approximately
-    equal-population buckets via ``approxQuantile`` boundaries — the
-    normalizer that makes z-ordering work on skewed/wide-range columns
-    (raw values would concentrate all rows in a few Morton cells).
-
-    The quantile sketch is one aggregate pass (GK sketch — fixed-size
-    partial-agg state); the boundaries come back driver-side
-    (``2^bits`` doubles — metadata-sized) and the bucket assignment is
-    a map-only binary search over the literal array: a bit-by-bit
-    refinement (``aggregate`` over the descending powers of two —
-    ``acc := acc + 2^b`` whenever that index's boundary is still
-    ``<= value``), i.e. O(bits) ``element_at`` probes per row, NOT a
-    linear scan of the 2^bits-1 boundaries.  The boundary literal is
-    bound once inside the aggregate lambda, so the expression size is
-    one copy of the array regardless of ``bits``.  An ``ntile`` window
-    would be the single-reducer global sort this module's operators
-    exist to avoid.
-
-    Returns a Column: the bucket index in ``[0, 2^bits)`` — the count
-    of boundaries ``<=`` the value (NULLs land in bucket 0).
-    """
-    from pyspark.sql import functions as F
-
-    n = 1 << bits
-    probs = [i / n for i in range(1, n)]
-    bounds = df.approxQuantile(col, probs, relative_error)
-    m = len(bounds)  # n - 1 sorted (ascending) boundaries, 1-indexed below
-    arr = "array(" + ",".join(f"{b!r}D" for b in bounds) + ")"
-    steps = "array(" + ",".join(str(1 << b) + "L"
-                                for b in range(bits - 1, -1, -1)) + ")"
-    v = (f"coalesce(cast({col} as double), "
-         f"cast('-Infinity' as double))")
-    # Classic Fenwick-style monotone-predicate search: after folding
-    # all bit weights, acc = largest c with bounds[c] <= v = the
-    # number of boundaries <= v.  Duplicated boundaries keep the
-    # predicate monotone, so ties produce the same count as the old
-    # linear-scan form (pinned by tests at bits=4).
-    return F.expr(
-        f"cast(aggregate({steps}, 0L, (acc, s) -> "
-        f"CASE WHEN acc + s <= {m} AND "
-        f"element_at({arr}, cast(acc + s AS int)) <= {v} "
-        f"THEN acc + s ELSE acc END) as int)")

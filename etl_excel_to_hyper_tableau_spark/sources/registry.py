@@ -16,17 +16,16 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.macro import sql_table_name
 
-_EXCEL_EXTS = (".xlsx", ".xls")
-
-
-def discover_files(directory: str, extensions: tuple = _EXCEL_EXTS) -> list[str]:
-    """List input files with the given extensions (reference
-    ``filter_directory``, query_iterator.py:60-68).  Errors if none."""
+def discover_files(directory: str) -> list[str]:
+    """List the ``.xlsx`` input files (reference ``filter_directory``,
+    query_iterator.py:60-68).  Errors if none.  Legacy ``.xls`` files
+    are not listed: :mod:`.xlsx_io` parses only the zip-based format,
+    and a listed ``a.xls`` would sort ahead of ``a.xlsx`` in
+    :func:`resolve_match` and then fail to parse."""
     names = [f for f in sorted(os.listdir(directory))
-             if f.lower().endswith(tuple(e.lower() for e in extensions))]
+             if f.lower().endswith(".xlsx")]
     if not names:
-        raise FileNotFoundError(
-            f"no files with extensions {extensions} in {directory!r}")
+        raise FileNotFoundError(f"no .xlsx files in {directory!r}")
     return names
 
 

@@ -81,24 +81,6 @@ def test_content_chunks_arrow_matches_sql(spark, edge_df, k, mb):
     _assert_same(a, s, cols)
 
 
-@pytest.mark.parametrize("n", [1, 3, 8])
-def test_dup_ngram_stats_arrow_matches_sql(spark, edge_df, n):
-    cols = ["source", "total_ngrams", "distinct_ngrams", "dup_frac"]
-    a = tx.dup_ngram_stats(edge_df, "text", "source", n=n, impl="arrow")
-    s = tx.dup_ngram_stats(edge_df, "text", "source", n=n, impl="sql")
-    _assert_same(a, s, cols)
-
-
-def test_dup_ngram_stats_arrow_flush_path(spark, edge_df):
-    """A tiny flush threshold forces multiple partial emissions per
-    partition — the downstream merge must still dedup distinct grams
-    across flushes."""
-    a = tx._dup_ngram_stats_arrow(edge_df, "text", "source", 3, flush_at=2)
-    s = tx.dup_ngram_stats(edge_df, "text", "source", n=3, impl="sql")
-    _assert_same(a, s, ["source", "total_ngrams", "distinct_ngrams",
-                        "dup_frac"])
-
-
 PHRASES = ["batch", "vector", "hash join", "table scan", "sort merge",
            "fast merge batch", "  hash   join  ", "café naïve"]
 
@@ -125,10 +107,6 @@ def test_arrow_kernels_on_real_corpus(spark, sf_dir):
         tx.content_chunks(docs, "text", "doc_id", impl="arrow"),
         tx.content_chunks(docs, "text", "doc_id", impl="sql"),
         ["id", "chunk_idx", "start_char", "length", "chunk_hash"])
-    _assert_same(
-        tx.dup_ngram_stats(docs, "text", "source", impl="arrow"),
-        tx.dup_ngram_stats(docs, "text", "source", impl="sql"),
-        ["source", "total_ngrams", "distinct_ngrams", "dup_frac"])
 
 
 def test_pykernels_match_hashing_module(spark):

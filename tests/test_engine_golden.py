@@ -121,3 +121,53 @@ def test_match_resolution_errors(spark, complaint_dir, tmp_path):
     eng = QueryEngine(spark, complaint_dir, [bundle], str(tmp_path))
     with pytest.raises(FileNotFoundError):
         eng.process_queries()
+
+
+def test_xls_twin_does_not_shadow_xlsx(spark, tmp_path):
+    # only the zip-based .xlsx is parseable; a legacy .xls with the same
+    # stem sorts first and must not be what the match resolves to
+    from etl_excel_to_hyper_tableau_spark.sources.registry import (
+        discover_files, resolve_match,
+    )
+    (tmp_path / "a_data.xls").write_bytes(b"\xd0\xcf\x11\xe0 not a zip")
+    xlsx_io.write_workbook(str(tmp_path / "a_data.xlsx"),
+                           [("Sheet1", _COLS, _ROWS)])
+    assert discover_files(str(tmp_path)) == ["a_data.xlsx"]
+    assert resolve_match(discover_files(str(tmp_path)), "a_data") \
+        == "a_data.xlsx"
+    bundle = QueryBundle.from_strings(
+        export_name="x", sink="parquet", matches=["a_data"],
+        sheets=["Sheet1"], query_strings=["SELECT company FROM Sheet1.sheet"],
+        query_names=["q"])
+    eng = QueryEngine(spark, str(tmp_path), [bundle], str(tmp_path / "out"))
+    eng.process_queries()
+    assert bundle.queried_dfs_by_query_name["q"][0][1].count() == len(_ROWS)
+
+
+def test_errors_name_the_file_and_query(spark, tmp_path):
+    import zipfile
+
+    from pyspark.errors.exceptions.captured import AnalysisException
+
+    (tmp_path / "bad.xlsx").write_bytes(b"not a zip archive")
+    bad = QueryBundle.from_strings(
+        export_name="x", sink="excel", matches=["bad"], sheets=["Sheet1"],
+        query_strings=["SELECT 1"], query_names=["q"])
+    with pytest.raises(zipfile.BadZipFile) as ei:
+        QueryEngine(spark, str(tmp_path), [bad], str(tmp_path)).process_queries()
+    notes = "\n".join(ei.value.__notes__)
+    assert "'Sheet1'" in notes and "bad.xlsx" in notes
+
+    good = tmp_path / "good"
+    good.mkdir()
+    xlsx_io.write_workbook(str(good / "complaints.xlsx"),
+                           [("Sheet1", _COLS, _ROWS)])
+    unknown_col = QueryBundle.from_strings(
+        export_name="x", sink="excel", matches=["complaints"],
+        sheets=["Sheet1"], query_strings=["SELECT no_such_col FROM Sheet1.sheet"],
+        query_names=["q_unknown_col"])
+    with pytest.raises(AnalysisException) as ei:
+        QueryEngine(spark, str(good), [unknown_col],
+                    str(tmp_path)).process_queries()
+    notes = "\n".join(ei.value.__notes__)
+    assert "'q_unknown_col'" in notes and "complaints.xlsx" in notes

@@ -1,5 +1,4 @@
-"""Parquet layout tools: compaction, Z-order keys, quantile buckets
-and partition pruning."""
+"""Parquet layout tools: compaction and partition pruning."""
 
 
 def test_compact_parquet_merges_small_files(spark, tmp_path):
@@ -19,137 +18,6 @@ def test_compact_parquet_merges_small_files(spark, tmp_path):
     back = spark.read.parquet(out)
     assert back.count() == 4000
     assert {r["id"] for r in back.collect()} == set(range(4000))
-
-
-def test_zorder_key_matches_morton_reference(spark):
-    from pyspark.sql import functions as F
-    from etl_excel_to_hyper_tableau_spark.sinks.parquet import zorder_key
-    rows = [(x, y) for x in range(8) for y in range(8)]
-    df = spark.createDataFrame(rows, "x long, y long")
-    got = {(r["x"], r["y"]): r["z"]
-           for r in df.select("x", "y",
-                              zorder_key(["x", "y"], bits=4).alias("z"))
-                      .collect()}
-
-    def morton(x, y, bits=4):
-        z = 0
-        for b in range(bits):
-            z |= ((x >> b) & 1) << (2 * b)
-            z |= ((y >> b) & 1) << (2 * b + 1)
-        return z
-
-    for (x, y), z in got.items():
-        assert z == morton(x, y), (x, y, z)
-
-
-def test_stage_zordered_tightens_both_columns(spark, tmp_path):
-    import pyarrow.parquet as pq
-    import glob
-    from etl_excel_to_hyper_tableau_spark.sinks.parquet import stage_zordered
-    # two independent uniform dims; row order random-ish by construction
-    rows = [((i * 2654435761) % 256, (i * 40503) % 256) for i in range(20000)]
-    df = spark.createDataFrame(rows, "x long, y long")
-    src = str(tmp_path / "src")
-    df.repartition(4).write.parquet(src)
-    out = str(tmp_path / "zout")
-    stats = stage_zordered(spark, src, out, ["x", "y"], bits=8,
-                           partitions=8)
-    # force multiple output files for a meaningful skipping measure
-    assert stats["files_out"] >= 2
-
-    def mean_area(path):
-        areas = []
-        for f in glob.glob(path + "/part-*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            lo = {c: None for c in ("x", "y")}
-            hi = {c: None for c in ("x", "y")}
-            for rg in range(md.num_row_groups):
-                for ci in range(md.num_columns):
-                    col = md.row_group(rg).column(ci)
-                    name = col.path_in_schema
-                    if name in lo and col.statistics is not None:
-                        mn, mx = col.statistics.min, col.statistics.max
-                        lo[name] = mn if lo[name] is None else min(lo[name], mn)
-                        hi[name] = mx if hi[name] is None else max(hi[name], mx)
-            areas.append(((hi["x"] - lo["x"] + 1) / 256.0)
-                         * ((hi["y"] - lo["y"] + 1) / 256.0))
-        return sum(areas) / len(areas)
-
-    # each z-ordered file covers a small fraction of the (x, y) square;
-    # the unsorted input's files each cover ~the whole square
-    assert mean_area(out) < 0.5 < mean_area(src)
-
-
-def test_zorder_key_refuses_bit_overflow(spark):
-    import pytest
-    from etl_excel_to_hyper_tableau_spark.sinks.parquet import zorder_key
-    with pytest.raises(ValueError, match="bits"):
-        zorder_key(["a", "b", "c", "d"], bits=16)
-
-
-def test_quantile_buckets_equalize_skewed_column(spark):
-    from pyspark.sql import functions as F
-    from etl_excel_to_hyper_tableau_spark.sinks.parquet import (
-        quantile_buckets, zorder_key,
-    )
-    # heavily skewed: 90% of values in [0, 10), long tail to 10^6
-    rows = [(i, float(i % 10) if i % 10 else float(i) * 100.0)
-            for i in range(2000)]
-    df = spark.createDataFrame(rows, "id long, v double")
-    b = quantile_buckets(df, "v", bits=4)  # 16 buckets
-    counts = (df.select(b.alias("bk")).groupBy("bk").count().collect())
-    ns = [r["count"] for r in counts]
-    assert all(0 <= r["bk"] < 16 for r in counts)
-    # approx-equal population: no bucket is wildly oversized
-    assert max(ns) <= 5 * (2000 // 16)
-    # bucketized columns compose with the Morton key
-    df2 = df.select(b.alias("x"), (F.col("id") % 16).alias("y"))
-    z = df2.select(zorder_key(["x", "y"], bits=4).alias("z")).collect()
-    assert all(0 <= r["z"] < 256 for r in z)
-
-
-def test_quantile_buckets_binary_search_matches_linear_scan(spark):
-    """The O(bits) bit-refinement search must produce exactly the
-    count-of-boundaries-<=-value bucket the old linear scan computed,
-    including on duplicated boundaries (constant runs from skew)."""
-    from pyspark.sql import functions as F
-    from etl_excel_to_hyper_tableau_spark.sinks.parquet import quantile_buckets
-    # 60% constant value -> long runs of identical quantile boundaries
-    rows = [(i, 5.0 if i % 5 < 3 else float(i)) for i in range(1000)]
-    df = spark.createDataFrame(rows, "id long, v double")
-    n = 1 << 4
-    probs = [i / n for i in range(1, n)]
-    bounds = df.approxQuantile("v", probs, 0.001)
-    arr = "array(" + ",".join(f"{b!r}D" for b in bounds) + ")"
-    linear = F.expr(
-        f"size(filter({arr}, b -> b <= coalesce(cast(v as double), "
-        f"cast('-Infinity' as double))))")
-    got = (df.select((quantile_buckets(df, "v", bits=4) == linear)
-                     .alias("same")).agg(F.min("same")).collect()[0][0])
-    assert got is True
-
-
-def test_quantile_buckets_default_bits16_finishes_fast(spark):
-    """At the documented default bits=16 (65,535 boundaries) bucket
-    assignment must be O(bits) probes per row — 100k rows in seconds,
-    not the ~6.5e9 comparisons of a per-row linear scan."""
-    import time
-    from pyspark.sql import functions as F
-    from etl_excel_to_hyper_tableau_spark.sinks.parquet import quantile_buckets
-    df = spark.range(100_000).select(
-        F.col("id"), (F.pmod(F.col("id") * 2654435761, F.lit(1_000_003))
-                      .cast("double")).alias("v"))
-    t0 = time.monotonic()
-    b = quantile_buckets(df, "v", bits=16)
-    res = (df.select(b.alias("bk"))
-           .agg(F.min("bk").alias("lo"), F.max("bk").alias("hi"),
-                F.count("*").alias("n")).collect()[0])
-    elapsed = time.monotonic() - t0
-    assert res["n"] == 100_000
-    assert 0 <= res["lo"] and res["hi"] < (1 << 16)
-    # near-uniform input should spread across most of the bucket range
-    assert res["hi"] - res["lo"] > (1 << 15)
-    assert elapsed < 60.0, f"bits=16 bucket assignment took {elapsed:.1f}s"
 
 
 def test_dpp_filter_planned_on_partitioned_join(spark, tmp_path):

@@ -411,25 +411,6 @@ def test_content_chunks_match_python_model(spark, text, mask_bits):
 
 
 @settings(**_SETTINGS)
-@given(vals=st.lists(st.floats(-100, 100, allow_nan=False,
-                               allow_infinity=False),
-                     min_size=4, max_size=40))
-def test_quantile_buckets_monotone_and_in_range(spark, vals):
-    """Bucket assignment is monotone in the value and lands in
-    [0, 2^bits) — for any input distribution (duplicates included)."""
-    from etl_excel_to_hyper_tableau_spark.sinks.parquet import (
-        quantile_buckets,
-    )
-    df = spark.createDataFrame([(i, float(v)) for i, v in enumerate(vals)],
-                               "id long, v double")
-    rows = (df.select("v", quantile_buckets(df, "v", bits=3).alias("b"))
-            .collect())
-    assert all(0 <= r["b"] < 8 for r in rows)
-    by_v = sorted(rows, key=lambda r: r["v"])
-    assert all(a["b"] <= b["b"] for a, b in zip(by_v, by_v[1:]))
-
-
-@settings(**_SETTINGS)
 @given(rows=st.lists(st.tuples(st.integers(0, 10**6),
                                st.sampled_from(["a", "b", "c"])),
                      min_size=1, max_size=25, unique_by=lambda t: t[0]),

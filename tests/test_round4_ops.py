@@ -519,10 +519,16 @@ def test_dup_ngram_stats_counts(spark):
     df = spark.createDataFrame(
         [(1, "a b c d", "s1"), (2, "a b c d", "s1"),  # exact repeat
          (3, "x y z", "s1"),                           # too short for n=3+1
-         (4, "p q r s t", "s2")],
+         (4, "p q r s t", "s2"),
+         (5, None, "s1"),                 # NULL text: no grams
+         (6, "x y", "s2"),                # fewer than n tokens: no grams
+         (7, "café über straße naïve", "s3"),
+         (8, "café über straße", "s3"),   # repeats doc 7's first gram
+         (9, None, "s4"), (10, "é ü", "s4")],  # a group with no grams
         "id long, text string, src string")
     out = {r["src"]: r for r in
            dup_ngram_stats(df, "text", "src", n=3).collect()}
+    assert set(out) == {"s1", "s2", "s3"}
     # s1: docs 1+2 contribute 2x ('a b c','b c d'), doc 3 one gram
     assert out["s1"]["total_ngrams"] == 5
     assert out["s1"]["distinct_ngrams"] == 3
@@ -530,6 +536,10 @@ def test_dup_ngram_stats_counts(spark):
     # s2: 3 grams, all unique
     assert out["s2"]["total_ngrams"] == 3
     assert out["s2"]["dup_frac"] == 0.0
+    # s3: 'café über straße' twice + 'über straße naïve' once
+    assert out["s3"]["total_ngrams"] == 3
+    assert out["s3"]["distinct_ngrams"] == 2
+    assert out["s3"]["dup_frac"] == pytest.approx(1 - 2 / 3)
 
 
 def test_training_order_is_a_permutation_and_stable(spark):

@@ -162,13 +162,7 @@ def main() -> None:
             src_pq += "/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src_pq}'")
 
-    # same warmup as bench.py: JVM/codegen startup + parquet footers
-    spark.range(1000).selectExpr("sum(id)").collect()
-    for t in entry.TABLES:
-        try:
-            entry._t(spark, sf_dir, t).count()
-        except Exception:
-            pass
+    entry.warm_up(spark, sf_dir)  # same warm-up as bench.py
 
     detail: dict[str, dict] = {}
     load_series: list[float] = []
