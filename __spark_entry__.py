@@ -3117,7 +3117,7 @@ def q_content_chunks(spark, sf_dir):
     rsync/LBFS rolling-hash boundaries): cut where the char-8-gram
     hash ≡ 0 mod 64, so boundaries follow content and near-identical
     documents share chunk hashes — the block-level dedup primitive.
-    Map-only; the gram-hash array is lambda-bound once per row."""
+    Map-only: one Arrow kernel pass, zero shuffles."""
     docs = _t(spark, sf_dir, "documents")
     # _fin_heavy, not _fin_wide: the Arrow kernel is the expensive part
     # of this plan, and a bare orderBy re-runs it in the range
@@ -4046,8 +4046,8 @@ _TAG_PHRASES = [
 
 def q_dictionary_tag(spark, sf_dir):
     """Phrase-dictionary taxonomy tagging (operators.text.dictionary_tag):
-    doc n-grams at the dictionary's token lengths broadcast-joined against
-    the phrase list — the Aho-Corasick-class task, map-side on the corpus."""
+    each document's phrase hits counted in one Arrow kernel pass — the
+    Aho-Corasick-class task, map-side on the corpus."""
     docs = _t(spark, sf_dir, "documents")
     return (tx.dictionary_tag(docs, "text", "doc_id", _TAG_PHRASES)
             .transform(_fin, "doc_id", "phrase"))

@@ -86,7 +86,17 @@ class QueryEngine:
 
     def run_query(self, query: Query, file_name: str) -> DataFrame:
         """Rewrite (.sheet macro + SQLite shim) and execute one
-        (query, file) pair.
+        (query, file) pair."""
+        sql = sqlite_to_spark(format_query(query.sql, file_name))
+        # WITH RECURSIVE … UNION ALL runs natively on Spark 4.1; the
+        # UNION-distinct form (SQLite's cyclic-closure idiom) does not —
+        # route it through the iterative-fixpoint evaluator
+        if is_recursive_union(sql):
+            return run_recursive_union_sql(self.spark, sql, self.run_sql)
+        return self.run_sql(sql)
+
+    def run_sql(self, sql: str) -> DataFrame:
+        """``spark.sql`` under SQLite's bare-column rule.
 
         SQLite permits bare (non-grouped, non-aggregated) select items in
         aggregate queries — an arbitrary in-group row's value is taken
@@ -95,12 +105,6 @@ class QueryEngine:
         MISSING_AGGREGATION error itself to identify the bare columns
         instead of reimplementing the analyzer's grouping check.
         """
-        sql = sqlite_to_spark(format_query(query.sql, file_name))
-        # WITH RECURSIVE … UNION ALL runs natively on Spark 4.1; the
-        # UNION-distinct form (SQLite's cyclic-closure idiom) does not —
-        # route it through the iterative-fixpoint evaluator
-        if is_recursive_union(sql):
-            return run_recursive_union_sql(self.spark, sql)
         for _ in range(20):  # one retry per bare column; select lists are short
             try:
                 return self.spark.sql(sql)

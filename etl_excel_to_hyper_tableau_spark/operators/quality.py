@@ -80,7 +80,7 @@ def corpus_summary(df: DataFrame, text_col: str, lang_col: str,
     ``localCheckpoint`` so the three downstream branches read ~tens of
     rows instead of re-running the pass.  The language entropy
     ``−Σ p·ln p`` folds in sorted language order (``aggregate`` over
-    ``sort_array(collect_list(...))``, the bm25 doctrine) so the double
+    ``sort_array(collect_list(...))``) so the double
     sum is bit-reproducible by an external engine.
 
     Output columns: ``n_docs, n_tokens, avg_doc_tokens, n_langs,

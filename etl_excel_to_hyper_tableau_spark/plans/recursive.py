@@ -141,6 +141,7 @@ def is_recursive_union(sql: str) -> bool:
 
 
 def run_recursive_union_sql(spark: SparkSession, sql: str,
+                            run_sql: Callable[[str], DataFrame],
                             max_iterations: int = 100) -> DataFrame:
     """Evaluate a UNION-distinct ``WITH RECURSIVE`` by driving
     :func:`recursive_fixpoint`: the base arm seeds the accumulator, the
@@ -149,7 +150,11 @@ def run_recursive_union_sql(spark: SparkSession, sql: str,
     main query runs over the accumulated fixpoint.  Dedup across rounds
     is what makes cyclic graphs terminate — the semantics SQLite users
     rely on for closures.  The UNION ALL form raises ``ValueError``:
-    ``spark.sql`` runs it natively."""
+    ``spark.sql`` runs it natively.
+
+    ``run_sql`` runs each of the three statements (base, step, main);
+    the engine passes its own runner so the arms get the same SQLite
+    semantics, such as the bare-column retry, as any other query."""
     p = _parse_recursive(sql)
     if p is None or p["union_all"] is None:
         raise ValueError("not a recursive WITH RECURSIVE statement")
@@ -170,7 +175,7 @@ def run_recursive_union_sql(spark: SparkSession, sql: str,
     result_view = f"__rec_result_{name}_{tag}"
     name_re = re.compile(rf"\b{re.escape(name)}\b", re.IGNORECASE)
 
-    base = spark.sql(base_sql)
+    base = run_sql(base_sql)
     if cols:
         base = base.toDF(*cols)
     base = base.distinct()  # SQL UNION dedups the base arm too
@@ -180,7 +185,7 @@ def run_recursive_union_sql(spark: SparkSession, sql: str,
 
     def step(frontier: DataFrame) -> DataFrame:
         frontier.createOrReplaceTempView(frontier_view)
-        out = spark.sql(step_tmpl).toDF(*base.columns)
+        out = run_sql(step_tmpl).toDF(*base.columns)
         # the anchor arm fixes the CTE's column types (the usual SQL
         # rule); cast the recursive arm to them
         return out.select(*[
@@ -189,7 +194,7 @@ def run_recursive_union_sql(spark: SparkSession, sql: str,
     try:
         acc = recursive_fixpoint(base, step, max_iterations=max_iterations)
         acc.createOrReplaceTempView(result_view)
-        return spark.sql(name_re.sub(result_view, main_sql))
+        return run_sql(name_re.sub(result_view, main_sql))
     finally:
         # the returned DataFrame's plan is already resolved against the
         # views, so neither needs to outlive this call

@@ -9,7 +9,6 @@ designs and stays plain Python.
 
 from __future__ import annotations
 
-import fnmatch
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,12 +31,9 @@ def discover_files(directory: str) -> list[str]:
 def resolve_match(file_names: list[str], match: str) -> str:
     """Resolve a user 'match' substring to the first file containing it
     (reference ``find_directory_match``, query_iterator.py:71-76).
-    Supports glob patterns as a superset when the match contains a
-    wildcard.  Errors if nothing matches."""
-    if any(ch in match for ch in "*?["):
-        hits = [f for f in file_names if fnmatch.fnmatch(f, match)]
-    else:
-        hits = [f for f in file_names if match in f]
+    Characters such as ``*``, ``?`` and ``[`` match themselves.  Errors
+    if nothing matches."""
+    hits = [f for f in file_names if match in f]
     if not hits:
         raise FileNotFoundError(f"match {match!r} resolves to no input file")
     return hits[0]

@@ -14,14 +14,10 @@ so the engine carries its own minimal OOXML SpreadsheetML implementation:
 Type inference mirrors what ``pd.read_excel`` produced on the reference's
 shipped files (SURVEY §1.3): numeric cells → int when integral else
 float; everything else stays ``str``; blanks → ``None``.
-
-If pandas+openpyxl are available, callers can still prefer them; this
-module is the always-available fallback and the one used in tests.
 """
 
 from __future__ import annotations
 
-import io
 import re
 import zipfile
 from xml.etree import ElementTree as ET
@@ -51,21 +47,10 @@ def _idx_to_col(idx: int) -> str:
     return out
 
 
-def sheet_names(path: str) -> list[str]:
+def read_sheet(path: str, sheet: str | int = 0) -> tuple[list[str], list[list]]:
+    """Read one worksheet → (column_names, data_rows), the first row
+    being the header."""
     with zipfile.ZipFile(path) as zf:
-        wb = ET.fromstring(zf.read("xl/workbook.xml"))
-        return [s.attrib["name"] for s in wb.findall("m:sheets/m:sheet", _NS)]
-
-
-def read_sheet(path: str | bytes, sheet: str | int = 0,
-               header: bool = True) -> tuple[list[str], list[list]]:
-    """Read one worksheet → (column_names, data_rows).
-
-    ``path`` may be a filesystem path or raw xlsx bytes (the distributed
-    Excel source hands in bytes from ``binaryFile`` rows).
-    """
-    src = io.BytesIO(path) if isinstance(path, (bytes, bytearray)) else path
-    with zipfile.ZipFile(src) as zf:
         wb = ET.fromstring(zf.read("xl/workbook.xml"))
         sheets = wb.findall("m:sheets/m:sheet", _NS)
         if isinstance(sheet, int):
@@ -119,10 +104,10 @@ def read_sheet(path: str | bytes, sheet: str | int = 0,
 
     width = max_col + 1
     dense = [[r.get(i) for i in range(width)] for r in raw_rows]
-    if header and dense:
-        cols = [str(c) if c is not None else f"Unnamed_{i}" for i, c in enumerate(dense[0])]
-        return cols, dense[1:]
-    return [f"col_{i}" for i in range(width)], dense
+    if not dense:
+        return [], []
+    cols = [str(c) if c is not None else f"Unnamed_{i}" for i, c in enumerate(dense[0])]
+    return cols, dense[1:]
 
 
 _CONTENT_TYPES = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>

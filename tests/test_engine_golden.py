@@ -171,3 +171,37 @@ def test_errors_name_the_file_and_query(spark, tmp_path):
                     str(tmp_path)).process_queries()
     notes = "\n".join(ei.value.__notes__)
     assert "'q_unknown_col'" in notes and "complaints.xlsx" in notes
+
+
+def test_match_is_a_literal_substring():
+    # the reference's substring rule: glob characters match themselves
+    from etl_excel_to_hyper_tableau_spark.sources.registry import resolve_match
+    assert resolve_match(["report[2024].xlsx"], "report[2024]") \
+        == "report[2024].xlsx"
+
+
+def test_recursive_union_retries_bare_columns_like_sqlite(spark, tmp_path):
+    # SQLite's bare-column rule holds inside a UNION-distinct recursive
+    # CTE too: region is neither grouped nor aggregated in the base arm
+    import sqlite3
+
+    cols, rows = ["company", "region", "qty"], [["A", "N", 1], ["A", "N", 2],
+                                                ["B", "S", 3]]
+    xlsx_io.write_workbook(str(tmp_path / "sales.xlsx"),
+                           [("Sheet1", cols, rows)])
+    sql = ("WITH RECURSIVE r(c, reg, n) AS (SELECT company, region, COUNT(*) "
+           "FROM {t} GROUP BY company UNION SELECT c, reg, n + 1 FROM r "
+           "WHERE n < 3) SELECT c, reg, n FROM r")
+    bundle = QueryBundle.from_strings(
+        export_name="x", sink="parquet", matches=["sales"], sheets=["Sheet1"],
+        query_strings=[sql.format(t="Sheet1.sheet")], query_names=["q"])
+    QueryEngine(spark, str(tmp_path), [bundle],
+                str(tmp_path / "out")).process_queries()
+    got = sorted(tuple(r) for r in
+                 bundle.queried_dfs_by_query_name["q"][0][1].collect())
+
+    con = sqlite3.connect(":memory:")
+    con.execute("CREATE TABLE t (company, region, qty)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
+    want = sorted(con.execute(sql.format(t="t")).fetchall())
+    assert len(want) == 5 and got == want

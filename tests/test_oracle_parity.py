@@ -25,7 +25,10 @@ SAMPLE = [
     "dedup_exact",            # md5 digest dedup
     "embedding_topk",         # vector math
     "text_profile",           # text operators
-    "dictionary_tag",         # broadcast n-gram dictionary join (round 6b)
+    "dictionary_tag",         # Arrow kernel: phrase-dictionary tagging
+    "winnow_fingerprints",    # Arrow kernel: md5 gram hashes + window min
+    "content_chunks",         # Arrow kernel: rolling-hash chunk boundaries
+    "bm25_search",            # Arrow kernel: per-doc term counts + BM25
     "context_pairs",          # user-bounded window, array output (round 6b)
     "knn_graph",              # valved exact self-kNN, rounded-rank contract
     "bucket_pruned_lookup",   # bucket-pruning plan contract (round 8)

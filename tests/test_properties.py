@@ -2,7 +2,10 @@
 identity query round-trips; pivot/concat row-count invariants;
 hashing-function portability invariants."""
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+import hashlib
+import re
+
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from etl_excel_to_hyper_tableau_spark.operators.combinators import (
@@ -18,6 +21,36 @@ _SETTINGS = dict(max_examples=10, deadline=None,
 _int_cell = st.one_of(st.none(), st.integers(-10**6, 10**6))
 _str_cell = st.one_of(st.none(), st.text(alphabet="abcXYZ 'é", max_size=8))
 _rows = st.lists(st.tuples(_int_cell, _str_cell), min_size=1, max_size=20)
+
+# Edge corpus for the text-kernel models: NULL, empty and short text,
+# exactly-k text, non-ASCII, U+00A0 (not whitespace to Java's ``\s``,
+# so it stays inside a token), tabs/newlines/space runs and repeats.
+EDGE_TEXTS = [
+    None, "", "short", "exactly8", "exactly8plus",
+    "the quick brown fox jumps over the lazy dog the quick brown fox",
+    "tabs\tand\nnewlines  and   runs of spaces",
+    "café naïve résumé café münchen straße",
+    "nbsp\u00a0joined tokens stay\u00a0glued here",
+    "aaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaa",
+    "hash join table scan hash join sort merge fast merge batch "
+    "slow filter batch vector",
+    " leading and trailing whitespace   ",
+]
+# 1/2/3-token phrases, a whitespace-padded duplicate, a non-ASCII one and
+# one that only a U+00A0-splitting tokenizer would find
+PHRASES = ["batch", "vector", "hash join", "table scan", "sort merge",
+           "fast merge batch", "  hash   join  ", "café naïve", "glued here"]
+
+
+def _java_tokens(text):
+    """The engine's ``tokens()``: a Java ``\\s+`` split (``\\s`` is
+    ASCII-only) with empty tokens dropped; NULL has none."""
+    return re.findall(r"[^ \t\n\x0b\f\r]+", text or "")
+
+
+def _md5_60(s: str) -> int:
+    """Python replay of ``functions.hashing.md5_int64``."""
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
 @settings(**_SETTINGS)
@@ -377,37 +410,34 @@ def test_balanced_shards_matches_python_model(spark, lengths, n_shards):
 
 
 @settings(**_SETTINGS)
-@given(text=st.text(alphabet="abcd ", min_size=0, max_size=120),
-       mask_bits=st.integers(2, 5))
-def test_content_chunks_match_python_model(spark, text, mask_bits):
-    """Chunk boundaries == a direct Python replay of the rolling-hash
-    rule; chunks always tile the document exactly."""
-    import hashlib
-
+@given(texts=st.lists(st.text(alphabet="abcd ", min_size=0, max_size=120),
+                      min_size=1, max_size=3),
+       k=st.sampled_from([3, 8]), mask_bits=st.integers(2, 5))
+@example(texts=EDGE_TEXTS, k=8, mask_bits=6)
+@example(texts=EDGE_TEXTS, k=3, mask_bits=2)
+def test_content_chunks_match_python_model(spark, texts, k, mask_bits):
+    """Chunk boundaries and hashes == a direct Python replay of the
+    rolling-hash rule; chunks always tile the document exactly;
+    NULL/empty documents emit no rows."""
     from etl_excel_to_hyper_tableau_spark.operators.text import (
         content_chunks,
     )
-    k, m = 8, 1 << mask_bits
-
-    def h(s: str) -> int:
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    got = sorted(content_chunks(df, "text", "doc_id", k=k,
-                                mask_bits=mask_bits).collect(),
-                 key=lambda r: r["chunk_idx"])
-    if len(text) == 0:
-        assert got == []
-        return
-    ends = sorted({i + k - 1 for i in range(1, len(text) - k + 2)
-                   if h(text[i - 1:i - 1 + k]) % m == 0} | {len(text)})
-    starts = [1] + [e + 1 for e in ends[:-1]]
-    assert [(r["chunk_idx"], r["start_char"], r["length"]) for r in got] \
-        == [(j + 1, s, e - s + 1)
-            for j, (s, e) in enumerate(zip(starts, ends))]
-    for r in got:
-        seg = text[r["start_char"] - 1: r["start_char"] - 1 + r["length"]]
-        assert r["chunk_hash"] == h(seg)
+    m = 1 << mask_bits
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    got = sorted(tuple(r) for r in content_chunks(
+        df, "text", "doc_id", k=k, mask_bits=mask_bits).collect())
+    want = []
+    for i, text in enumerate(texts):
+        if not text:
+            continue
+        ends = sorted({j + k - 1 for j in range(1, len(text) - k + 2)
+                       if _md5_60(text[j - 1:j - 1 + k]) % m == 0}
+                      | {len(text)})
+        starts = [1] + [e + 1 for e in ends[:-1]]
+        want += [(i, j + 1, s, e - s + 1, _md5_60(text[s - 1:e]))
+                 for j, (s, e) in enumerate(zip(starts, ends))]
+    assert got == sorted(want)
 
 
 @settings(**_SETTINGS)
@@ -575,6 +605,7 @@ _dict_phrases = st.lists(
 
 @settings(**_SETTINGS)
 @given(docs=_dict_docs, phrases=_dict_phrases)
+@example(docs=EDGE_TEXTS, phrases=PHRASES)
 def test_dictionary_tag_matches_python_model(spark, docs, phrases):
     from etl_excel_to_hyper_tableau_spark.operators.text import (
         dictionary_tag,
@@ -589,7 +620,7 @@ def test_dictionary_tag_matches_python_model(spark, docs, phrases):
     norm = sorted({" ".join(p.split()) for p in phrases if p.strip()})
     want = {}
     for i, doc in enumerate(docs):
-        toks = doc.split()
+        toks = _java_tokens(doc)
         for p in norm:
             pt = p.split()
             hits = sum(1 for s in range(len(toks) - len(pt) + 1)
@@ -823,37 +854,36 @@ def test_domain_cap_never_exceeds_cap_and_keeps_under_cap_domains_whole(
 
 
 @settings(**_SETTINGS)
-@given(text=st.text(alphabet="abcab", min_size=0, max_size=80))
-def test_winnow_guarantee_one_fingerprint_per_window(spark, text):
+@given(texts=st.lists(st.text(alphabet="abcab", min_size=0, max_size=80),
+                      min_size=1, max_size=3),
+       k=st.sampled_from([3, 4, 8]), w=st.sampled_from([2, 3, 6, 9]))
+@example(texts=EDGE_TEXTS, k=8, w=6)
+@example(texts=EDGE_TEXTS, k=3, w=2)
+@example(texts=EDGE_TEXTS, k=4, w=9)
+def test_winnow_guarantee_one_fingerprint_per_window(spark, texts, k, w):
     """Winnowing's defining guarantee (SIGMOD'03): every window of w
-    consecutive k-gram hashes contributes at least one selected
-    fingerprint — verified against a brute-force rolling min."""
-    import hashlib
-
+    consecutive k-gram hashes contributes its minimum.  The fingerprints
+    are exactly the sorted distinct window minima of a brute-force
+    rolling min (one window when a document has at most w grams, none
+    when it has no gram), and every document emits one row."""
     from etl_excel_to_hyper_tableau_spark.operators.text import (
         winnow_fingerprints,
     )
 
-    def md5_int64_py(s):
-        # Python replay of functions.hashing.md5_int64 (60-bit)
-        return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-
-    k, w = 4, 3
-    df = spark.createDataFrame([(0, text)], "doc_id long, text string")
-    row = winnow_fingerprints(df, "text", "doc_id", k=k, w=w).collect()
-    grams = [text[i:i + k] for i in range(max(0, len(text) - k + 1))]
-    hashes = [md5_int64_py(g) for g in grams]
-    if not hashes:
-        assert row == [] or row[0]["n_fps"] == 0
-        return
-    fps = set(row[0]["fingerprints"])
-    assert row[0]["n_grams"] == len(hashes)
-    if len(hashes) <= w:
-        assert fps == {min(hashes)}
-        return
-    for i in range(len(hashes) - w + 1):
-        assert fps & set(hashes[i:i + w]), f"window {i} unrepresented"
-    assert fps <= set(hashes)
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    got = {r["id"]: (r["n_grams"], r["n_fps"], list(r["fingerprints"]))
+           for r in winnow_fingerprints(df, "text", "doc_id",
+                                        k=k, w=w).collect()}
+    want = {}
+    for i, text in enumerate(texts):
+        hashes = [_md5_60(text[j:j + k])
+                  for j in range(len(text or "") - k + 1)]
+        windows = [hashes[j:j + w]
+                   for j in range(max(1, len(hashes) - w + 1))]
+        fps = sorted({min(win) for win in windows if win})
+        want[i] = (len(hashes), len(fps), fps)
+    assert got == want
 
 
 @settings(**_SETTINGS)
@@ -1905,11 +1935,23 @@ def test_range_join_binned_matches_theta_semantics(spark, points,
     assert got == ref, (points, ranges, width)
 
 
+_BM25_TERMS = ["the", "hash", "batch", "absentterm"]
+
+
 @settings(**_SETTINGS)
 @given(docs=st.lists(st.lists(st.sampled_from(["cat", "dog", "fox"]),
-                              min_size=1, max_size=8),
-                     min_size=1, max_size=6))
-def test_bm25_scores_match_formula(spark, docs):
+                              min_size=1, max_size=8).map(" ".join),
+                     min_size=1, max_size=6),
+       terms=st.lists(st.sampled_from(["cat", "FOX", "owl"]),
+                      min_size=1, max_size=3),
+       corpus_stats=st.none())
+@example(docs=EDGE_TEXTS, terms=_BM25_TERMS, corpus_stats=None)
+@example(docs=EDGE_TEXTS, terms=_BM25_TERMS, corpus_stats=(12, 400))
+@example(docs=["cat dog"], terms=[], corpus_stats=None)
+def test_bm25_scores_match_formula(spark, docs, terms, corpus_stats):
+    """Scores, hit counts and the set of scored documents == the BM25
+    formula evaluated in Python (NULL text is an empty document; no
+    query terms gives no rows, with the same columns)."""
     import math
     from collections import Counter
 
@@ -1917,29 +1959,35 @@ def test_bm25_scores_match_formula(spark, docs):
         bm25_scores,
     )
 
-    terms = ["cat", "fox"]
     k1, b = 1.2, 0.75
-    rows = [(i, " ".join(t)) for i, t in enumerate(docs)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["id"]: r["score"] for r in
-           bm25_scores(df, "text", "doc_id", terms).collect()}
-    n = len(docs)
-    avgdl = sum(len(t) for t in docs) / n
-    dfreq = {t: sum(1 for d in docs if t in d) for t in terms}
-    for i, toks in enumerate(docs):
-        cnt = Counter(toks)
+    df = spark.createDataFrame(list(enumerate(docs)),
+                               "doc_id long, text string")
+    out = bm25_scores(df, "text", "doc_id", terms,
+                      corpus_stats=corpus_stats)
+    assert out.dtypes == [("id", "bigint"), ("n_terms_hit", "bigint"),
+                          ("score", "double")]
+    got = {r["id"]: (r["n_terms_hit"], r["score"]) for r in out.collect()}
+    toks = [[t.lower() for t in _java_tokens(d)] for d in docs]
+    q = sorted({t.lower() for t in terms})
+    n, sum_dl = corpus_stats or (len(docs), sum(map(len, toks)))
+    avgdl = sum_dl / n
+    dfreq = {t: sum(1 for d in toks if t in d) for t in q}
+    want = {}
+    for i, d in enumerate(toks):
+        cnt = Counter(d)
+        hit = [t for t in q if cnt[t]]      # sorted-token fold order
+        if not hit:
+            continue
         ref = 0.0
-        for t in sorted(terms):      # sorted-token fold order
-            tf = cnt.get(t, 0)
-            if tf == 0:
-                continue
+        for t in hit:
             idf = math.log(1.0 + (n - dfreq[t] + 0.5) / (dfreq[t] + 0.5))
-            ref += idf * tf * (k1 + 1) / (tf + k1 * (1 - b
-                                                     + b * len(toks) / avgdl))
-        if i in got:
-            assert abs(got[i] - ref) < 1e-9, (docs, i)
-        else:
-            assert ref == 0.0
+            ref += idf * cnt[t] * (k1 + 1) / (cnt[t] + k1 * (
+                1 - b + b * len(d) / avgdl))
+        want[i] = (len(hit), ref)
+    assert got.keys() == want.keys(), (docs, terms)
+    for i, (n_hit, ref) in want.items():
+        assert got[i][0] == n_hit
+        assert abs(got[i][1] - ref) < 1e-9, (docs, i)
 
 
 @settings(**_SETTINGS)

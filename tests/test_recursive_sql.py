@@ -34,7 +34,8 @@ def test_union_distinct_cycle_matches_duckdb(spark):
     edges = [(1, 2), (2, 3), (3, 1), (3, 4)]
     spark.createDataFrame(edges, "s long, d long") \
          .createOrReplaceTempView("edges_t")
-    got = [r["n"] for r in run_recursive_union_sql(spark, CYCLE_UNION).collect()]
+    got = [r["n"] for r in
+           run_recursive_union_sql(spark, CYCLE_UNION, spark.sql).collect()]
 
     con = duckdb.connect()
     con.execute("CREATE TABLE edges_t AS SELECT * FROM (VALUES "
@@ -61,10 +62,10 @@ def test_multi_cte_union_distinct_pointed_error(spark):
            "WHERE x < 3), other AS (SELECT 2) SELECT * FROM r, other")
     assert is_recursive_union(sql)
     with pytest.raises(NotImplementedError, match="recursive_fixpoint"):
-        run_recursive_union_sql(spark, sql)
+        run_recursive_union_sql(spark, sql, spark.sql)
     # UNION ALL runs natively through spark.sql; the evaluator refuses it
     with pytest.raises(ValueError, match="UNION ALL"):
-        run_recursive_union_sql(spark, COUNTER_ALL)
+        run_recursive_union_sql(spark, COUNTER_ALL, spark.sql)
 
 
 def test_union_distinct_leaves_no_temp_view(spark):
@@ -74,7 +75,7 @@ def test_union_distinct_leaves_no_temp_view(spark):
     spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "s long, d long") \
          .createOrReplaceTempView("edges_t")
     before = views()
-    out = run_recursive_union_sql(spark, CYCLE_UNION)
+    out = run_recursive_union_sql(spark, CYCLE_UNION, spark.sql)
     assert views() == before
     # the returned frame is resolved already: it still runs after the drop
     assert [r["n"] for r in out.collect()] == [1, 2, 3]

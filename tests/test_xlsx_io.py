@@ -29,17 +29,9 @@ def test_roundtrip_values_and_types(sample_xlsx):
     assert isinstance(rows[0][1], int) and isinstance(rows[0][2], float)
 
 
-def test_sheet_names_and_index_access(sample_xlsx):
-    assert xlsx_io.sheet_names(sample_xlsx) == ["Sheet1", "Other"]
+def test_read_sheet_by_index(sample_xlsx):
     cols, rows = xlsx_io.read_sheet(sample_xlsx, 1)
     assert cols == ["k"] and rows == [["v"]]
-
-
-def test_read_from_bytes(sample_xlsx):
-    with open(sample_xlsx, "rb") as f:
-        raw = f.read()
-    cols, _ = xlsx_io.read_sheet(raw, "Sheet1")
-    assert cols == ["name", "qty", "price", "ok"]
 
 
 def test_missing_sheet_raises(sample_xlsx):
