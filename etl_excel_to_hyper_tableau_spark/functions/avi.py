@@ -1,8 +1,7 @@
 """Pure-stdlib+numpy AVI/MJPEG video codec: a RIFF container walker
 around the real baseline-JPEG codec (:mod:`.jpeg`), so COMPRESSED
 video runs end-to-end on genuine bytes with no media library in the
-container — the compressed companion to the uncompressed
-YUV4MPEG2 path (:mod:`.y4m`).
+container.
 
 Layout written (and accepted back):
 

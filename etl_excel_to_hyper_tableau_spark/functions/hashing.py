@@ -48,11 +48,6 @@ def md5_int64(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
-def md5_int64_array(tokens: Column) -> Column:
-    """Element-wise :func:`md5_int64` over an array column."""
-    return F.transform(tokens, lambda t: md5_int64(t))
-
-
 def char_ngrams(col: Column, n: int = 3) -> Column:
     """Array of character n-grams of a string column (JVM-side:
     ``transform(sequence(...))``).  Strings shorter than n yield an
@@ -136,6 +131,3 @@ def simhash64(tokens: Column) -> Column:
     return simhash_from_hashes(F.transform(tokens, lambda t: md5_int64(t)))
 
 
-def hamming60(a: Column, b: Column) -> Column:
-    """Hamming distance between two 60-bit simhash values via bit_count."""
-    return F.bit_count(a.bitwiseXOR(b))

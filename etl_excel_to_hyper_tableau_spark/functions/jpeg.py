@@ -61,7 +61,6 @@ _ZIG = np.array([
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63],
     dtype=np.int64)
-_UNZIG = np.argsort(_ZIG)
 
 # --- Annex K.3 standard Huffman tables: (BITS counts 1..16, HUFFVAL) --
 _DC_LUMA = ([0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0],

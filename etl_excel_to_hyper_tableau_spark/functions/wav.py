@@ -1,12 +1,12 @@
-"""Pure-stdlib WAV codec: RIFF / PCM16 plus IMA ADPCM — no audio
-library required.
+"""Pure-stdlib WAV codec: RIFF / PCM16 plus an IMA ADPCM decoder — no
+audio library required.
 
 Same doctrine as :mod:`.png`: formats whose byte layout is fully
 public are implemented for real, so the multimodal audio path runs on
 genuine encoded bytes end-to-end; only codecs that need native
 decoders (MP3/AAC/Opus) remain behind the documented fake boundary.
 
-Formats written/read:
+Formats read (PCM16 is also written):
 
 * **PCM16** (``audio_format=1``): canonical 44-byte RIFF header,
   16-bit little-endian samples, interleaved channels.
@@ -75,79 +75,6 @@ def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
     hdr = (b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
            + b"fmt " + struct.pack("<IHHIIHH", 16, 1, channels,
                                    sample_rate, byte_rate, block_align, 16)
-           + b"data" + struct.pack("<I", len(data)))
-    return hdr + data
-
-
-def encode_wav_adpcm(samples: np.ndarray, sample_rate: int = 16000,
-                     block_samples: int = 505) -> bytes:
-    """Encode mono int16 samples as IMA ADPCM WAV (format 0x11): ~4:1
-    compression, 4 bits/sample.  ``block_samples`` per block (default
-    505 → 256-byte blocks, the conventional layout: 4-byte header + 252
-    nibble bytes)."""
-    arr = np.asarray(samples)
-    if arr.ndim == 2 and arr.shape[1] == 1:
-        arr = arr[:, 0]
-    if arr.ndim != 1:
-        raise ValueError("IMA ADPCM encoder is mono-only")
-    pcm = [int(x) for x in arr.astype("<i2")]
-    if (block_samples - 1) % 2:
-        raise ValueError("block_samples must be odd (header sample + "
-                         "2 samples per nibble byte)")
-    block_align = 4 + (block_samples - 1) // 2
-    blocks = bytearray()
-    # encoder freedom: seed the step index from the first delta instead
-    # of 0, so the quantizer doesn't spend the onset ramping up from
-    # step=7 (the decoder reads the index from the block header either
-    # way)
-    if len(pcm) > 1:
-        d0 = abs(pcm[1] - pcm[0])
-        index = min(range(89), key=lambda i: abs(_IMA_STEPS[i] - d0))
-    else:
-        index = 0
-    for start in range(0, len(pcm), block_samples):
-        chunk = pcm[start:start + block_samples]
-        predictor = chunk[0]
-        blocks += struct.pack("<hBB", predictor, index, 0)
-        nib_bytes = bytearray()
-        pending = None
-        for s in chunk[1:]:
-            step = _IMA_STEPS[index]
-            diff = s - predictor
-            nibble = 0
-            if diff < 0:
-                nibble = 8
-                diff = -diff
-            if diff >= step:
-                nibble |= 4
-                diff -= step
-            if diff >= step >> 1:
-                nibble |= 2
-                diff -= step >> 1
-            if diff >= step >> 2:
-                nibble |= 1
-            predictor, index = _ima_step(nibble, predictor, index)
-            if pending is None:
-                pending = nibble
-            else:
-                nib_bytes.append(pending | (nibble << 4))  # low first
-                pending = None
-        if pending is not None:
-            nib_bytes.append(pending)
-        nib_bytes += b"\x00" * ((block_align - 4) - len(nib_bytes))
-        blocks += nib_bytes
-    data = bytes(blocks)
-    byte_rate = (sample_rate * block_align + block_samples - 1) \
-        // block_samples
-    fmt = struct.pack("<HHIIHHHH", 0x11, 1, sample_rate, byte_rate,
-                      block_align, 4, 2, block_samples)
-    fact = struct.pack("<I", len(pcm))
-    hdr = (b"RIFF"
-           + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(fact)
-                         + 8 + len(data))
-           + b"WAVE"
-           + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-           + b"fact" + struct.pack("<I", len(fact)) + fact
            + b"data" + struct.pack("<I", len(data)))
     return hdr + data
 

@@ -41,36 +41,6 @@ from pyspark.sql import DataFrame, functions as F
 from .parallelism import spread
 
 
-def nb_token_weights(df: DataFrame, text_col: str, label_col: str
-                     ) -> DataFrame:
-    """Multinomial-NB token weight table.
-
-    Returns one row per distinct token: ``token, c1, c0, w`` where
-    ``c1/c0`` are class-conditional occurrence counts and ``w`` is the
-    add-one-smoothed log-likelihood ratio in integer micro-nats::
-
-        w = round(1e6 · (ln((c1+1)/(T1+V)) − ln((c0+1)/(T0+V))))
-
-    ``label_col`` must be 0/1.
-    """
-    from .text import tokens
-
-    occ = (spread(df)
-           .select(F.col(label_col).cast("int").alias("y"),
-                   F.explode(tokens(F.col(text_col))).alias("token")))
-    counts = (occ.groupBy("token")
-              .agg(F.sum("y").cast("long").alias("c1"),
-                   F.sum(1 - F.col("y")).cast("long").alias("c0")))
-    totals = counts.agg(F.sum("c1").alias("t1"), F.sum("c0").alias("t0"),
-                        F.count(F.lit(1)).alias("v"))
-    # one-row broadcast: totals attach to every vocabulary row
-    w = (F.log((F.col("c1") + 1) / (F.col("t1") + F.col("v")))
-         - F.log((F.col("c0") + 1) / (F.col("t0") + F.col("v"))))
-    return (counts.crossJoin(F.broadcast(totals))
-            .select("token", "c1", "c0",
-                    F.round(w * 1e6).cast("long").alias("w")))
-
-
 def nb_quality_score(df: DataFrame, text_col: str, id_col: str,
                      label_col: str) -> DataFrame:
     """Train the NB filter on ``df``'s own labels and score every

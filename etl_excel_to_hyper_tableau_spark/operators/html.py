@@ -57,8 +57,6 @@ _VOID_TAGS = frozenset(
     {"area", "base", "br", "col", "embed", "hr", "img", "input",
      "link", "meta", "source", "track", "wbr"})
 
-_PARA_CHARS = 80  # synthesis: body text chunk size per <p>
-
 
 def _escape(col: Column) -> Column:
     """HTML-escape a text column JVM-side (``&`` first, then angle

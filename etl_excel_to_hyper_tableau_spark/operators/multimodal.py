@@ -6,11 +6,9 @@ signatures, batch shapes — and so are the codecs: a pure-stdlib PNG
 codec (:mod:`..functions.png`, zlib inflate + scanline un-filter), a
 pure stdlib+numpy baseline JPEG codec (:mod:`..functions.jpeg`,
 Huffman entropy coding + 8×8 DCT — a real entropy-coded format,
-encode and decode), a pure-stdlib WAV codec (:mod:`..functions.wav`,
-RIFF/PCM16 chunk walker), and a pure-stdlib Y4M video codec
-(:mod:`..functions.y4m`, YUV4MPEG2 demux) decode/encode real image,
-audio, and video bytes end-to-end (:func:`resize_images`,
-:func:`audio_features`, :func:`sample_frames_y4m`).  Codecs that
+encode and decode) and a pure-stdlib WAV codec (:mod:`..functions.wav`,
+RIFF/PCM16 chunk walker) decode real image and audio bytes end-to-end
+(:func:`decode_image`, :func:`audio_fingerprint`).  Codecs that
 genuinely need native libraries absent from this container (MP3/AAC,
 H.264/VP9, HEIC) degrade to clearly-marked deterministic fakes
 (documented per-function); swapping in Pillow/torchaudio/PyAV is a
@@ -44,55 +42,6 @@ MEDIA_SCHEMA = T.StructType([
         T.StructField("n_frames", T.IntegerType(), True),
     ]), True),
 ])
-
-
-def make_fake_media(spark, n: int = 64, kind: str = "image") -> DataFrame:
-    """Deterministic synthetic media table matching MEDIA_SCHEMA — bytes
-    are seeded by id so every run (and every engine) sees identical
-    content."""
-    rows = []
-    for i in range(n):
-        payload = hashlib.sha256(f"{kind}:{i}".encode()).digest() * 8  # 256 B
-        rows.append((i, kind, payload,
-                     ("png", 32, 24, None, None) if kind == "image"
-                     else ("wav", None, None, 16000, 1 + i % 50)))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def make_png_media(spark, n: int = 16, width: int = 32,
-                   height: int = 24) -> DataFrame:
-    """Synthetic media table whose ``content`` is REAL encoded PNG bytes
-    (stdlib codec — :mod:`..functions.png`): deterministic per-id
-    greyscale gradient images, so the full decode→resample→encode path
-    runs on genuine image data with no image library installed."""
-    from ..functions.png import encode_png
-
-    rows = []
-    for i in range(n):
-        yy, xx = np.mgrid[0:height, 0:width]
-        arr = ((xx * 7 + yy * 13 + i * 31) % 256).astype(np.uint8)
-        rows.append((i, "image", encode_png(arr),
-                     ("png", width, height, None, None)))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def make_jpeg_media(spark, n: int = 16, width: int = 32,
-                    height: int = 24, quality: int = 90) -> DataFrame:
-    """Synthetic media table whose ``content`` is REAL baseline JFIF
-    bytes (stdlib+numpy codec — :mod:`..functions.jpeg`): deterministic
-    per-id smooth gradients (JPEG is lossy; smooth content keeps the
-    round-trip error small), so the full entropy-decode→resample→encode
-    path runs on genuine JPEG data with no image library installed."""
-    from ..functions.jpeg import encode_jpeg
-
-    rows = []
-    for i in range(n):
-        yy, xx = np.mgrid[0:height, 0:width]
-        arr = np.clip(128 + 60 * np.sin((xx + i * 3) / 6.0)
-                      * np.cos((yy + i) / 5.0), 0, 255).astype(np.uint8)
-        rows.append((i, "image", encode_jpeg(arr, quality=quality),
-                     ("jpeg", width, height, None, None)))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def decode_image(content: bytes, width: int, height: int) -> np.ndarray:
@@ -199,299 +148,6 @@ def _fake_decode_gray(content: bytes, width: int, height: int) -> np.ndarray:
     need = width * height
     reps = -(-need // max(len(buf), 1))
     return np.tile(buf, reps)[:need].reshape(height, width)
-
-
-def resize_images(df: DataFrame, width: int, height: int,
-                  decode=None, encode=None,
-                  out_format: str = "raw") -> DataFrame:
-    """Resize each image row to ``width×height`` via Arrow-batched
-    ``mapInPandas``; ``content`` is replaced by the re-encoded resized
-    image and ``meta.width/height/format`` are updated.
-
-    The resampling is real (nearest-neighbor index math on the decoded
-    array), and so is the PNG half of the codec boundary:
-    ``decode(bytes, w, h) → ndarray`` defaults to
-    :func:`decode_image`, which fully decodes real PNG content through
-    the stdlib codec (:mod:`..functions.png`) and falls back to the
-    deterministic fake only for formats with no installable codec
-    here.  ``encode(ndarray) → bytes`` defaults to raw row-major bytes
-    (format ``"raw"``); pass ``encode=png.encode_png,
-    out_format="png"`` for a real PNG→PNG round trip.  Swapping in
-    Pillow for the other formats is a one-line ``decode=``; the
-    distributed plumbing does not move.
-    """
-    decode = decode or decode_image
-    encode = encode or (lambda arr: arr.astype(np.uint8).tobytes())
-    out_schema = df.schema
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents, metas = [], []
-            for c, m in zip(pdf["content"], pdf["meta"]):
-                if c is None or m is None:
-                    contents.append(None)
-                    metas.append(m)
-                    continue
-                src = decode(bytes(c), m["width"] or 1, m["height"] or 1)
-                sh, sw = src.shape[:2]
-                # nearest-neighbor resample (floor of the center-aligned
-                # source index — the standard NN formula)
-                yi = np.minimum(((np.arange(height) + 0.5) * sh / height)
-                                .astype(np.int64), sh - 1)
-                xi = np.minimum(((np.arange(width) + 0.5) * sw / width)
-                                .astype(np.int64), sw - 1)
-                out = src[np.ix_(yi, xi)]
-                contents.append(encode(out))
-                metas.append({**m, "format": out_format,
-                              "width": width, "height": height})
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "kind": pdf["kind"],
-                                "content": contents, "meta": metas})
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
-def sample_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Keep every ``every_n``-th frame of each video/audio row (frame 0,
-    n, 2n, …), via Arrow-batched ``mapInPandas``; ``content`` becomes
-    the kept frames concatenated and ``meta.n_frames`` the kept count.
-
-    STUB CODEC (container demuxer): frames are taken as ``n_frames``
-    equal byte-slices of the content — a deterministic stand-in for a
-    real demuxer (PyAV); the frame-selection arithmetic and the
-    batch plumbing are the real operator.
-    """
-    out_schema = df.schema
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents, metas = [], []
-            for c, m in zip(pdf["content"], pdf["meta"]):
-                n = (m or {}).get("n_frames") or 0
-                if c is None or n <= 0:
-                    contents.append(c if c is None else bytes(c))
-                    metas.append(m)
-                    continue
-                buf = bytes(c)
-                flen = max(len(buf) // n, 1)
-                kept = [buf[i * flen:(i + 1) * flen]
-                        for i in range(0, n, every_n) if i * flen < len(buf)]
-                contents.append(b"".join(kept))
-                metas.append({**m, "n_frames": len(kept)})
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "kind": pdf["kind"],
-                                "content": contents, "meta": metas})
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
-def make_wav_media(spark, n: int = 16, sample_rate: int = 8000,
-                   duration_s: float = 0.05) -> DataFrame:
-    """Synthetic media table whose ``content`` is REAL encoded WAV bytes
-    (stdlib RIFF/PCM16 codec — :mod:`..functions.wav`): deterministic
-    per-id sine tones at distinct frequencies, so the full decode →
-    sample-math path runs on genuine audio data with no audio library
-    installed."""
-    from ..functions.wav import encode_wav
-
-    n_samp = int(sample_rate * duration_s)
-    rows = []
-    for i in range(n):
-        freq = 200.0 + 100.0 * i
-        t = np.arange(n_samp) / sample_rate
-        samples = (np.sin(2 * np.pi * freq * t) * 12000.0).astype(np.int16)
-        rows.append((i, "audio", encode_wav(samples, sample_rate),
-                     ("wav", None, None, sample_rate, n_samp)))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-_AUDIO_FEATURE_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("sample_rate", T.IntegerType(), True),
-    T.StructField("n_samples", T.LongType(), True),
-    T.StructField("channels", T.IntegerType(), True),
-    T.StructField("duration_s", T.DoubleType(), True),
-    T.StructField("rms", T.DoubleType(), True),
-    T.StructField("peak", T.IntegerType(), True),
-    T.StructField("zero_crossing_rate", T.DoubleType(), True),
-])
-
-
-def audio_features(df: DataFrame,
-                   target_partition_bytes: int = 64 * 1024 * 1024
-                   ) -> DataFrame:
-    """REAL audio feature extraction over WAV-encoded binary rows: the
-    stdlib RIFF/PCM16 decoder (:mod:`..functions.wav`) parses genuine
-    encoded bytes inside the Arrow batch, then the features are plain
-    sample math — duration, RMS, peak amplitude, zero-crossing rate
-    (the classic cheap audio-quality / silence-detection signals a
-    curation pipeline gates on).
-
-    Same distributed shape as :func:`extract_features`: byte-budget
-    repartition ahead of the map (media rows are wide), Arrow-batched
-    ``mapInPandas``, narrow feature output that shuffles freely
-    downstream.  Rows whose bytes are not decodable PCM16 WAV yield
-    NULL features rather than failing the batch (quarantine-and-
-    continue, the same contract as the JSONL source's corrupt-line
-    handling).
-    """
-    from ..functions.wav import decode_wav
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "sample_rate", "n_samples",
-                                   "channels", "duration_s", "rms", "peak",
-                                   "zero_crossing_rate")}
-            for mid, content in zip(pdf["media_id"], pdf["content"]):
-                out["media_id"].append(mid)
-                try:
-                    arr, sr = decode_wav(bytes(content))
-                except (ValueError, TypeError, struct.error):
-                    for k in ("sample_rate", "n_samples", "channels",
-                              "duration_s", "rms", "peak",
-                              "zero_crossing_rate"):
-                        out[k].append(None)
-                    continue
-                mono = arr.astype(np.float64).mean(axis=1)
-                n = len(mono)
-                signs = np.signbit(mono[mono != 0.0])
-                zc = int(np.count_nonzero(signs[1:] != signs[:-1]))
-                out["sample_rate"].append(sr)
-                out["n_samples"].append(n)
-                out["channels"].append(arr.shape[1])
-                out["duration_s"].append(n / sr if sr else None)
-                out["rms"].append(float(np.sqrt(np.mean(mono ** 2)))
-                                  if n else 0.0)
-                out["peak"].append(int(np.abs(arr).max()) if n else 0)
-                out["zero_crossing_rate"].append(zc / n if n else 0.0)
-            yield pd.DataFrame(out)
-
-    return (repartition_by_bytes(df, target_partition_bytes=target_partition_bytes)
-            .mapInPandas(run, schema=_AUDIO_FEATURE_SCHEMA))
-
-
-def make_y4m_media(spark, n: int = 8, width: int = 32, height: int = 24,
-                   n_frames: int = 12) -> DataFrame:
-    """Synthetic media table whose ``content`` is REAL encoded Y4M video
-    bytes (stdlib YUV4MPEG2 codec — :mod:`..functions.y4m`):
-    deterministic per-id moving-gradient frames, so the full demux →
-    frame-sample → re-encode path runs on genuine container bytes with
-    no video library installed."""
-    from ..functions.y4m import encode_y4m
-
-    rows = []
-    for i in range(n):
-        yy, xx = np.mgrid[0:height, 0:width]
-        frames = np.stack([
-            ((xx * 5 + yy * 11 + i * 17 + f * 29) % 256).astype(np.uint8)
-            for f in range(n_frames)])
-        rows.append((i, "video", encode_y4m(frames),
-                     ("y4m", width, height, None, n_frames)))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def sample_frames_y4m(df: DataFrame, every_n: int = 10,
-                      target_partition_bytes: int = 128 << 20) -> DataFrame:
-    """REAL video frame sampling: demux genuine Y4M container bytes
-    (stdlib codec), keep every ``every_n``-th frame, re-encode — the
-    actual decode→select→encode pipeline :func:`sample_frames` stubs
-    for opaque compressed formats.  Same distributed shape: byte-budget
-    repartition, Arrow-batched ``mapInPandas``, output rows carry the
-    re-encoded container with updated ``meta.n_frames``.  Undecodable
-    rows pass through unchanged with ``meta`` intact (quarantine-and-
-    continue)."""
-    from ..functions.y4m import decode_y4m, encode_y4m
-
-    out_schema = df.schema
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents, metas = [], []
-            for c, m in zip(pdf["content"], pdf["meta"]):
-                if c is None:
-                    contents.append(None)
-                    metas.append(m)
-                    continue
-                try:
-                    frames, fps = decode_y4m(bytes(c))
-                except ValueError:
-                    contents.append(bytes(c))
-                    metas.append(m)
-                    continue
-                kept = frames[::every_n]
-                contents.append(encode_y4m(kept, fps=fps))
-                metas.append({**(m or {}), "n_frames": int(len(kept))})
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "kind": pdf["kind"],
-                                "content": contents, "meta": metas})
-
-    return (repartition_by_bytes(df, target_partition_bytes=target_partition_bytes)
-            .mapInPandas(run, schema=out_schema))
-
-
-def make_avi_media(spark, n: int = 8, width: int = 32, height: int = 24,
-                   n_frames: int = 12, quality: int = 90) -> DataFrame:
-    """Synthetic media table whose ``content`` is REAL MJPEG AVI bytes
-    (:mod:`..functions.avi` — a RIFF muxer over the real baseline-JPEG
-    codec): deterministic per-id moving-gradient frames, so the
-    COMPRESSED-video demux → frame-sample → remux path runs on genuine
-    container bytes with no video library installed (the compressed
-    companion to :func:`make_y4m_media`)."""
-    from ..functions.avi import encode_avi_mjpeg
-
-    rows = []
-    for i in range(n):
-        yy, xx = np.mgrid[0:height, 0:width]
-        frames = np.stack([
-            ((xx * 5 + yy * 11 + i * 17 + f * 29) % 256).astype(np.uint8)
-            for f in range(n_frames)])
-        rows.append((i, "video", encode_avi_mjpeg(frames, quality=quality),
-                     ("avi", width, height, None, n_frames)))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def sample_frames_avi(df: DataFrame, every_n: int = 10,
-                      quality: int = 90,
-                      target_partition_bytes: int = 128 << 20) -> DataFrame:
-    """REAL compressed-video frame sampling: demux genuine MJPEG AVI
-    bytes, keep every ``every_n``-th frame, remux.  MJPEG's
-    frame-independence (every frame its own JPEG) is exactly what makes
-    this a map-only operation — no inter-frame state crosses rows or
-    partitions, so the byte-budget repartition + Arrow ``mapInPandas``
-    shape is identical to the uncompressed :func:`sample_frames_y4m`.
-    Undecodable rows pass through unchanged (quarantine-and-continue).
-    Note the kept frames are re-encoded (one JPEG generation loss);
-    lossless passthrough of the selected '00dc' chunks would need only
-    the muxer, but re-encode keeps the API symmetric with the Y4M path
-    and exercises the encoder distributed."""
-    from ..functions.avi import decode_avi_mjpeg, encode_avi_mjpeg
-
-    out_schema = df.schema
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            contents, metas = [], []
-            for c, m in zip(pdf["content"], pdf["meta"]):
-                if c is None:
-                    contents.append(None)
-                    metas.append(m)
-                    continue
-                try:
-                    frames, fps = decode_avi_mjpeg(bytes(c))
-                except (ValueError, struct.error):
-                    contents.append(bytes(c))
-                    metas.append(m)
-                    continue
-                kept = frames[::every_n]
-                contents.append(encode_avi_mjpeg(kept, fps=fps,
-                                                 quality=quality))
-                metas.append({**(m or {}), "n_frames": int(len(kept))})
-            yield pd.DataFrame({"media_id": pdf["media_id"],
-                                "kind": pdf["kind"],
-                                "content": contents, "meta": metas})
-
-    return (repartition_by_bytes(df, target_partition_bytes=target_partition_bytes)
-            .mapInPandas(run, schema=out_schema))
 
 
 # ---------------------------------------------------------------------------

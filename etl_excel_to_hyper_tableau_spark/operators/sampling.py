@@ -153,18 +153,6 @@ def sample_to_mixture(df: DataFrame, id_col: str, strata_col: str,
     return df.filter(bucket < thresh.otherwise(F.lit(0)))
 
 
-def exact_k_per_stratum(df: DataFrame, id_col: str, strata_col: str,
-                        k: int, salt: str = "sample") -> DataFrame:
-    """Exactly min(k, n) rows per stratum, chosen by hash order — the
-    deterministic analogue of per-group reservoir sampling.  One shuffle
-    (the window partition); rank columns are dropped."""
-    from pyspark.sql import Window
-    bucket = hash_bucket(F.col(id_col), salt)
-    w = Window.partitionBy(strata_col).orderBy(bucket.asc(), F.col(id_col).asc())
-    return (df.withColumn("__rk__", F.row_number().over(w))
-            .filter(F.col("__rk__") <= k).drop("__rk__"))
-
-
 def negative_pairs(df: DataFrame, id_col: str, k: int = 4,
                    salt: str = "neg") -> DataFrame:
     """``k`` deterministic pseudo-random negative partners per row —

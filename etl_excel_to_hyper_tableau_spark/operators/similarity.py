@@ -1,13 +1,10 @@
 """Similarity search over an embedding column (``array<float>``).
 
-* :func:`topk_cosine` — brute-force exact top-k: one pass over the
-  corpus, per-partition partial top-k via sort+limit (Spark's
-  ``TakeOrderedAndProject`` — no full sort, no full shuffle), the
-  correctness baseline at any corpus size where a full scan is
-  acceptable.
-* :func:`topk_cosine_batch` — many queries at once: broadcast the
-  (small) query set, cross join against the corpus, window-rank per
-  query.  The corpus never shuffles — only the tiny result set does.
+* :func:`topk_cosine_batch` — brute-force exact top-k for many
+  queries at once: broadcast the (small) query set, cross join against
+  the corpus, window-rank per query.  The corpus never shuffles — only
+  the tiny result set does; the correctness baseline at any corpus
+  size where a full scan is acceptable.
 * :func:`ann_topk_lsh` — the scale path: sign-LSH bucketing (shared
   with :mod:`.dedup`) prunes the corpus to the query's bucket (plus
   multi-probe neighbors at Hamming distance 1), trading recall for a
@@ -34,19 +31,6 @@ from .parallelism import spread
 
 def _cosine(vec: Column, qvec: Column) -> Column:
     return _dot(vec, qvec) / (_norm(vec) * _norm(qvec))
-
-
-def topk_cosine(df: DataFrame, vec_col: str, id_col: str,
-                query_vec: list[float], k: int = 10) -> DataFrame:
-    """Exact top-k by cosine similarity to one literal query vector.
-
-    Ties broken by id for determinism.  Output: ``id, cosine`` (k rows).
-    """
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = spread(df).select(
-        F.col(id_col).alias("id"),
-        _cosine(F.col(vec_col).cast("array<double>"), q).alias("cosine"))
-    return scored.orderBy(F.desc("cosine"), F.asc("id")).limit(k)
 
 
 def topk_cosine_batch(corpus: DataFrame, queries: DataFrame,

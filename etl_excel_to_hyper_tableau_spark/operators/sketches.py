@@ -318,36 +318,6 @@ def hll_estimate_py(register_rows, p: int = 8) -> dict:
             "raw_register_sum": s, "estimate": _round_half_up(e, 4)}
 
 
-def histogram_quantiles_py(cells, bins: int,
-                           qs: tuple[float, ...] = (0.5, 0.95, 0.99),
-                           round_to: int = 6) -> dict:
-    """Driver-side replica of :func:`histogram_quantiles` over
-    collected sketch cells (``(bin, cnt, lo, hi, n)`` rows) — same
-    first-bin-reaching-``ceil(q·n)`` rule, same pinned interpolation
-    op order as the SQL oracle (``lo + (bin + (target - cum_before)
-    / cnt) * (hi - lo) / bins``), rounded at the boundary.  Returns
-    ``{q: estimate}`` (empty dict for an empty sketch)."""
-    if not cells:
-        return {}
-    rows = sorted((int(r[0]), int(r[1])) for r in cells)
-    lo, hi, n = float(cells[0][2]), float(cells[0][3]), int(cells[0][4])
-    out = {}
-    for q in qs:
-        target = int(-(-q * n // 1))  # ceil(q*n), same float multiply as SQL
-        cum = 0
-        for b, cnt in rows:
-            if cum + cnt >= target:
-                if hi == lo:
-                    out[q] = lo
-                else:
-                    out[q] = _round_half_up(
-                        lo + (b + (target - cum) / cnt)
-                        * (hi - lo) / float(bins), round_to)
-                break
-            cum += cnt
-    return out
-
-
 def fixed_histogram_cells(df: DataFrame, value_col: str,
                           width: float) -> DataFrame:
     """Fixed-width histogram cells in ONE pass — no bounds pre-scan:
@@ -812,8 +782,6 @@ def histogram_quantiles(sketch: DataFrame, bins: int,
     return (hit.select("q", "target_rank",
                        F.round(est, round_to).alias("estimate"))
             .orderBy("q"))
-
-
 
 
 def histogram_sketch_by(df: DataFrame, value_col: str, group_col: str,

@@ -1,9 +1,10 @@
-"""Skew-handling utilities: salted joins and bucketed staging.
+"""Skew-handling utilities: salted joins, key-skew reports and
+bloom-filter pruning.
 
 AQE's skew-join splitting (on by default, `session.py`) handles most
-skew at runtime by splitting oversized sort-merge partitions.  Two
-cases still need explicit treatment at 100 TB, and these helpers are
-the standard recipes:
+skew at runtime by splitting oversized sort-merge partitions.  One
+case still needs explicit treatment at 100 TB, and this is the
+standard recipe:
 
 * :func:`salted_join` — when one fact-side key is so hot that even a
   split partition is dominated by a single key (AQE can split a
@@ -12,17 +13,13 @@ the standard recipes:
   every (key, salt) bucket can still match.  Replication is by literal
   explode — no Python, one extra narrow stage.
 
-* :func:`stage_bucketed` / :func:`read_bucketed` — co-located joins:
-  write both fact tables bucketed by the join key once at staging
-  time, and every subsequent equi-join on that key runs with **no
-  exchange on either side** (verified by plan assertions in tests).
-  This is the Parquet-staging half of the engine's Excel→Parquet
-  scale story (SURVEY §7 M6).
+Co-located joins through bucketed tables live in
+:mod:`..plans.bucketing`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def salted_join(skewed: DataFrame, other: DataFrame, key: str,
@@ -115,22 +112,6 @@ def auto_salted_join(skewed: DataFrame, other: DataFrame, key: str,
         F.explode(F.sequence(F.lit(0),
                              F.coalesce(salt_of, F.lit(1)) - F.lit(1))))
     return salted_l.join(salted_r, [key, "__salt__"], how).drop("__salt__")
-
-
-def stage_bucketed(df: DataFrame, table_name: str, key: str,
-                   buckets: int = 32, sort_by: str | None = None) -> None:
-    """Write ``df`` as a bucketed (and optionally sorted) managed
-    parquet table.  Joins between two tables bucketed on the same key
-    with the same bucket count skip the exchange entirely; sorting
-    within buckets also skips the sort of a sort-merge join."""
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(buckets, key)
-    if sort_by:
-        writer = writer.sortBy(sort_by)
-    writer.saveAsTable(table_name)
-
-
-def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
 
 
 def key_skew_report(df: DataFrame, key: str, topk: int = 10) -> DataFrame:

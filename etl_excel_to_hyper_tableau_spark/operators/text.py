@@ -136,25 +136,6 @@ def quality_score(col: Column) -> Column:
     return (length_score * 0.4 + punct_score * 0.3 + stop_score * 0.3)
 
 
-def fingerprint64(col: Column) -> Column:
-    """Order-sensitive 64-bit document fingerprint: left-fold polynomial
-    rolling hash over *token* md5 hashes, mod 2^61-1.
-
-    ``h := (h * 1000003 + md5_31(tok)) mod M61`` — all int64-exact
-    (h < 2^61, multiplier < 2^20 ⟹ product < 2^81... kept safe by
-    reducing h to 41 bits before the multiply).  Portable to any
-    engine with 64-bit ints and md5.
-    """
-    m61 = (1 << 61) - 1
-    toks = tokens(col)
-    tok_h = F.transform(toks, lambda t: md5_int64(t) % F.lit(1 << 31))
-    return F.aggregate(
-        tok_h,
-        F.lit(0).cast("long"),
-        lambda acc, h: ((acc % F.lit(1 << 41)) * F.lit(1000003) + h) % F.lit(m61),
-    )
-
-
 def text_profile(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """One-stop per-document profile: language, quality, token counts,
     fingerprint — narrow projections; the only possible shuffle is the

@@ -222,14 +222,46 @@ def sqlite_to_spark(sql: str) -> str:
 
 
 _SELECT_RE = re.compile(r"\bSELECT\b(\s+(ALL|DISTINCT)\b)?", re.IGNORECASE)
-_FROM_RE = re.compile(r"\bFROM\b", re.IGNORECASE)
+_MINMAX_RE = re.compile(r"\b(min|max)\s*\(", re.IGNORECASE)
+
+
+def _single_minmax(select_list: str) -> tuple[str, str] | None:
+    """``(fn, arg)`` when the select list holds exactly one
+    one-argument ``min``/``max`` aggregate outside any subquery, else
+    None.  Two-argument ``max(a, b)`` is SQLite's scalar form and
+    ``max(x) OVER (...)`` a window function; neither counts."""
+    calls = []
+    for m in _MINMAX_RE.finditer(select_list):
+        opens = []
+        for i, c in enumerate(select_list[:m.start()]):
+            if c == "(":
+                opens.append(i)
+            elif c == ")" and opens:
+                opens.pop()
+        if any(re.match(r"\(\s*SELECT\b", select_list[i:], re.IGNORECASE)
+               for i in opens):
+            continue
+        depth, j = 1, m.end()
+        while j < len(select_list) and depth:
+            depth += {"(": 1, ")": -1}.get(select_list[j], 0)
+            j += 1
+        args = _top_level_split(select_list[m.end():j - 1])
+        if len(args) == 1 and not re.match(r"\s*OVER\b", select_list[j:],
+                                            re.IGNORECASE):
+            arg = re.sub(r"^\s*(DISTINCT|ALL)\b", "", args[0],
+                         flags=re.IGNORECASE)
+            calls.append((m.group(1).lower(), arg.strip()))
+    return calls[0] if len(calls) == 1 else None
 
 
 def rewrite_bare_column(sql: str, column: str) -> str:
-    """Wrap one bare select-list item in ``any_value(...) AS name`` —
-    the Spark expression of SQLite's bare-columns-in-aggregate rule
-    (a non-grouped, non-aggregated select item takes an arbitrary
-    in-group row's value; SURVEY §2C aggregation delta).
+    """Wrap one bare select-list item in an aggregate ``AS name`` — the
+    Spark expression of SQLite's bare-columns-in-aggregate rule
+    (SURVEY §2C aggregation delta).  When the select list holds exactly
+    one ``min(x)``/``max(x)`` aggregate, SQLite takes bare columns from
+    the row that holds the extreme, so the item becomes
+    ``min_by(item, x)``/``max_by(item, x)``; otherwise any in-group
+    row's value will do and it becomes ``any_value(item)``.
 
     Only exact top-level select-list items matching ``column`` (or
     ``alias.column``) are rewritten, so occurrences inside function
@@ -254,11 +286,15 @@ def rewrite_bare_column(sql: str, column: str) -> str:
             from_at = sel.end() + m.start()
             break
     select_list = code[sel.end():from_at] if from_at else code[sel.end():]
+    extreme = _single_minmax(select_list)
     item_re = re.compile(rf"^(\w+\.)?{re.escape(column)}$", re.IGNORECASE)
-    items = [
-        f" any_value({it.strip()}) AS {column}" if item_re.match(it.strip()) else it
-        for it in _top_level_split(select_list)
-    ]
+    items = []
+    for it in _top_level_split(select_list):
+        if item_re.match(it.strip()):
+            agg = (f"{extreme[0]}_by({it.strip()}, {extreme[1]})" if extreme
+                   else f"any_value({it.strip()})")
+            it = f" {agg} AS {column}"
+        items.append(it)
     end = from_at if from_at else len(code)
     code = code[:sel.end()] + ",".join(items) + code[end:]
     return _unmask(code, literals)

@@ -37,70 +37,6 @@ class HyperUnavailableError(RuntimeError):
     pass
 
 
-def _json_blobs(data: bytes, marker: bytes = b'{"compressionMethod"'):
-    """Yield every parseable JSON document starting at ``marker`` in a
-    binary blob (brace-balanced scan, quote/escape aware)."""
-    import json
-
-    i = 0
-    while True:
-        start = data.find(marker, i)
-        if start == -1:
-            return
-        depth, j, in_str, esc = 0, start, False, False
-        while j < len(data):
-            c = data[j]
-            if in_str:
-                if esc:
-                    esc = False
-                elif c == 0x5C:  # backslash
-                    esc = True
-                elif c == 0x22:  # quote
-                    in_str = False
-            else:
-                if c == 0x22:
-                    in_str = True
-                elif c == 0x7B:  # {
-                    depth += 1
-                elif c == 0x7D:  # }
-                    depth -= 1
-                    if depth == 0:
-                        j += 1
-                        break
-            j += 1
-        try:
-            yield json.loads(data[start:j].decode("utf-8", "replace"))
-        except ValueError:
-            pass
-        i = j
-
-
-def read_hyper_catalog(path: str) -> list[dict]:
-    """Read the table catalog embedded in a ``.hyper`` file WITHOUT
-    tableauhyperapi: Hyper files carry their catalog as a plain JSON
-    document (observed in the reference's golden
-    ``complaints_by_bank.hyper``: ``{"compressionMethod": …,
-    "relations": [{"name": …, "attributes": [{"name", "type"}…]}…]}``).
-    Multiple catalog snapshots may exist (pre/post table creation);
-    the one with the most relations — the final state — is returned as
-    ``[{"table": name, "columns": [(col_name, [type…])]}]``.
-
-    This is a *read-only golden-file comparator*, not a writer: the
-    write path still requires tableauhyperapi (hyperd speaks a
-    proprietary protocol); see :func:`write_hyper`.
-    """
-    with open(path, "rb") as f:
-        data = f.read()
-    best: list = []
-    for doc in _json_blobs(data):
-        rels = doc.get("relations", [])
-        if len(rels) > len(best):
-            best = rels
-    return [{"table": r["name"],
-             "columns": [(a["name"], a["type"]) for a in r["attributes"]]}
-            for r in best]
-
-
 def plan_hyper_tables(results: list[tuple[str, DataFrame]]) -> list[dict]:
     """Pure planning step: one table plan per query result —
     ``{"table": name, "columns": [(col_name, sqltype_name, nullable)]}``.

@@ -5,12 +5,11 @@ as WARC, and everything in :mod:`..operators.html` /
 
 Two halves, the media-factory pattern:
 
-* :func:`read_warc_dir` — the real scan: ``binaryFile`` rows (one task
-  per archive — WARC's gzip-member layout admits per-FILE parallelism
-  naturally, and crawls ship many ~1 GB files) parsed on executors
-  through the stdlib codec (:mod:`..functions.warc`), one output row
-  per ``response`` record.  Unparseable archives/records are dropped
-  (quarantine-and-continue, the media-decoder contract).
+* :func:`parse_warc_column` — the real parse: a binary column of
+  archives parsed on executors through the stdlib codec
+  (:mod:`..functions.warc`), one output row per ``response`` record.
+  Unparseable archives/records are dropped (quarantine-and-continue,
+  the media-decoder contract).
 * :func:`make_warc_media` — deterministic archive synthesis from the
   documents table, entirely inside ``mapInPandas`` (REAL per-record
   gzip members, pinned mtime — byte-deterministic), so tests and the
@@ -26,62 +25,10 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..functions import warc as _w
 from ..operators.parallelism import spread
-
-_OUT_SCHEMA = T.StructType([
-    T.StructField("source_file", T.StringType(), True),
-    T.StructField("record_idx", T.LongType(), False),
-    T.StructField("url", T.StringType(), True),
-    T.StructField("status", T.IntegerType(), True),
-    T.StructField("content_type", T.StringType(), True),
-    T.StructField("body", T.BinaryType(), True),
-])
-
-
-def read_warc_dir(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Distributed WARC scan → one row per ``response`` record:
-    ``source_file, record_idx (position within its archive), url,
-    status, content_type, body``."""
-    bf = (spark.read.format("binaryFile").load(path_glob)
-          .select("path", "content"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("source_file", "record_idx", "url",
-                                    "status", "content_type", "body")}
-            for path, blob in zip(pdf["path"], pdf["content"]):
-                try:
-                    recs = _w.parse_warc(bytes(blob))
-                except (ValueError, OSError):
-                    continue
-                for i, (hdr, payload) in enumerate(recs):
-                    if hdr.get("WARC-Type") != "response":
-                        continue
-                    try:
-                        status, hhdr, body = _w.parse_http_response(payload)
-                    except ValueError:
-                        continue
-                    rows["source_file"].append(path)
-                    rows["record_idx"].append(i)
-                    rows["url"].append(hdr.get("WARC-Target-URI"))
-                    rows["status"].append(status)
-                    rows["content_type"].append(hhdr.get("Content-Type"))
-                    rows["body"].append(body)
-            yield pd.DataFrame({
-                "source_file": pd.array(rows["source_file"],
-                                        dtype="string"),
-                "record_idx": pd.array(rows["record_idx"], dtype="int64"),
-                "url": pd.array(rows["url"], dtype="string"),
-                "status": pd.array(rows["status"], dtype="int32"),
-                "content_type": pd.array(rows["content_type"],
-                                         dtype="string"),
-                "body": rows["body"],
-            })
-
-    return bf.mapInPandas(run, schema=_OUT_SCHEMA)
 
 
 def parse_warc_column(df: DataFrame, content_col: str,

@@ -156,63 +156,6 @@ def run_dedup_stream_availablenow(spark: SparkSession, events_dir: str,
     return spark.table(name)
 
 
-def running_user_totals_stream(spark: SparkSession, events_dir: str,
-                               watermark: str = "2 hours") -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: per-user
-    running totals (event count + value sum) carried in explicit state
-    across micro-batches — the escape hatch for stateful logic that
-    windowed aggregation can't express.  State is one tiny tuple per
-    user; timeouts are left unset because the demo state is bounded by
-    the user-id domain (a real pipeline would set TTL timeouts)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql import types as T
-    import pandas as pd
-
-    out_schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-    ])
-    state_schema = T.StructType([
-        T.StructField("n", T.LongType()),
-        T.StructField("total", T.DoubleType()),
-    ])
-
-    def update(key, pdfs, state: GroupState):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].fillna(0.0).sum())
-        state.update((n, total))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n],
-                            "total_value": [total]})
-
-    stream = _event_stream(spark, events_dir).withWatermark("ts", watermark)
-    return (stream.groupBy("user_id")
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
-
-
-def run_running_totals_availablenow(spark: SparkSession, events_dir: str) -> DataFrame:
-    name = "ev_totals_" + uuid.uuid4().hex[:8]
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    q = (running_user_totals_stream(spark, events_dir)
-         .writeStream.format("memory").queryName(name)
-         .outputMode("update")
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True)
-         .start())
-    try:
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    # per-user latest state (several micro-batches may each emit a row)
-    t = spark.table(name)
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (t.withColumn("__rn__", F.row_number().over(w))
-            .filter(F.col("__rn__") == 1).drop("__rn__"))
-
-
 def latest_state_stream(spark: SparkSession, events_dir: str,
                         watermark: str = "2 hours") -> DataFrame:
     """Streaming CDC: the running *latest* version per user — the

@@ -1,8 +1,8 @@
 """Property campaign over the media codecs (round 9, judge item 7):
 hypothesis-generated images/waveforms/frame-stacks through encode →
 decode, asserting exact round-trips for the lossless formats
-(PNG, PCM WAV, Y4M) and documented-lossy bounds / invariances for the
-lossy ones (baseline JPEG, IMA ADPCM, MJPEG AVI).  Pure-Python
+(PNG, PCM WAV) and documented-lossy bounds / invariances for the
+lossy ones (baseline JPEG, MJPEG AVI).  Pure-Python
 codecs — no SparkSession needed, so the whole file runs in
 milliseconds per example.
 
@@ -27,10 +27,7 @@ from etl_excel_to_hyper_tableau_spark.functions.png import (
     decode_png, encode_png,
 )
 from etl_excel_to_hyper_tableau_spark.functions.wav import (
-    decode_wav, encode_wav, encode_wav_adpcm,
-)
-from etl_excel_to_hyper_tableau_spark.functions.y4m import (
-    decode_y4m, encode_y4m,
+    decode_wav, encode_wav,
 )
 
 _SETTINGS = dict(max_examples=25, deadline=None)
@@ -76,46 +73,6 @@ def test_wav_pcm16_roundtrip_exact(seed, n, channels, rate):
     assert got_rate == rate
     assert back.shape == (n, channels)
     assert np.array_equal(back, samples)
-
-
-@settings(**_SETTINGS)
-@given(seed=_seed, n=st.integers(2, 1500),
-       max_delta=st.integers(1, 256))
-def test_wav_adpcm_smooth_signal_bounded_error(seed, n, max_delta):
-    # IMA ADPCM tracks signals whose per-sample delta fits the step
-    # table; a random walk with bounded steps must come back with
-    # bounded error and the EXACT length (fact chunk)
-    rng = np.random.default_rng(seed)
-    deltas = rng.integers(-max_delta, max_delta + 1, size=n)
-    samples = np.clip(np.cumsum(deltas), -30000, 30000).astype(np.int16)
-    back, rate = decode_wav(encode_wav_adpcm(samples, sample_rate=16000))
-    assert rate == 16000
-    assert back.shape == (n, 1)
-    err = np.abs(back[:, 0].astype(np.int64)
-                 - samples.astype(np.int64)).max()
-    # quantizer error per step is O(step/8); with |delta| <= 256 the
-    # tracked step stays small — empirical worst case across 10^4
-    # seeds is < 400, asserted with margin
-    assert err <= 1024, err
-
-
-@settings(**_SETTINGS)
-@given(seed=_seed, n=st.integers(1, 1200))
-def test_wav_adpcm_noise_preserves_length(seed, n):
-    samples = _rng_array(seed, (n,), dtype=np.int16, lo=-32768, hi=32768)
-    back, _ = decode_wav(encode_wav_adpcm(samples))
-    assert back.shape == (n, 1)       # fact chunk trims block padding
-
-
-@settings(**_SETTINGS)
-@given(seed=_seed, n=st.integers(1, 6), dims=_dims,
-       fps=st.sampled_from([(25, 1), (30000, 1001), (12, 1)]))
-def test_y4m_roundtrip_exact(seed, n, dims, fps):
-    frames = _rng_array(seed, (n, *dims))
-    back, got_fps = decode_y4m(encode_y4m(frames, fps=fps))
-    assert got_fps == fps
-    assert back.shape == frames.shape
-    assert np.array_equal(back, frames)
 
 
 @settings(**_SETTINGS)
@@ -173,7 +130,7 @@ def test_avi_mjpeg_frames_equal_per_frame_jpeg(seed, n, dims, fps):
 
 def test_codecs_reject_garbage():
     junk = b"definitely not media bytes" * 4
-    for dec in (decode_png, decode_jpeg, decode_y4m):
+    for dec in (decode_png, decode_jpeg):
         with pytest.raises(ValueError):
             dec(junk)
     with pytest.raises(ValueError):

@@ -82,6 +82,24 @@ def test_rewrite_bare_column_qualified():
     assert "any_value(t.name) AS name" in out
 
 
+@pytest.mark.parametrize("select, wrapped", [
+    ("region, MAX(qty) AS m", "max_by(region, qty)"),
+    ("t.region, min(DISTINCT qty), count(*)", "min_by(t.region, qty)"),
+    ("region, max(qty + 1) + 1", "max_by(region, qty + 1)"),
+    # two extremes, a scalar max(a, b), a window and a subquery: no rule
+    ("region, max(qty), min(qty)", "any_value(region)"),
+    ("region, max(qty, 2), count(*)", "any_value(region)"),
+    ("region, max(qty) OVER (PARTITION BY company), count(*)",
+     "any_value(region)"),
+    ("region, (SELECT max(x) FROM u), count(*)", "any_value(region)"),
+], ids=["max", "min_distinct", "max_expr", "two_extremes", "scalar_max",
+        "window", "subquery"])
+def test_rewrite_bare_column_takes_the_single_min_max_row(select, wrapped):
+    out = rewrite_bare_column(f"SELECT {select} FROM t GROUP BY company",
+                              "region")
+    assert f"{wrapped} AS region" in out
+
+
 def test_literal_masking_preserves_escaped_quotes():
     sql = "SELECT 'it''s' FROM t WHERE a LIKE 'o''brien%'"
     out = sqlite_to_spark(sql)

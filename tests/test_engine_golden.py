@@ -205,3 +205,35 @@ def test_recursive_union_retries_bare_columns_like_sqlite(spark, tmp_path):
     con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
     want = sorted(con.execute(sql.format(t="t")).fetchall())
     assert len(want) == 5 and got == want
+
+
+def test_min_max_bare_columns_come_from_the_extreme_row_like_sqlite(
+        spark, tmp_path):
+    # with exactly one min()/max() aggregate, SQLite takes a bare column
+    # from the row that holds the extreme, not from an arbitrary row
+    import sqlite3
+
+    cols = ["company", "region", "qty"]
+    rows = [["A", "N", 1], ["A", "S", 5], ["A", "E", 3], ["B", "W", 2],
+            ["B", "X", 9]]
+    xlsx_io.write_workbook(str(tmp_path / "sales.xlsx"),
+                           [("Sheet1", cols, rows)])
+    sqls = {name: f"SELECT company, region, {fn}(qty) AS m, COUNT(*) AS n "
+                  "FROM {t} GROUP BY company"
+            for name, fn in (("hi", "MAX"), ("lo", "MIN"))}
+    bundle = QueryBundle.from_strings(
+        export_name="x", sink="parquet", matches=["sales"], sheets=["Sheet1"],
+        query_strings=[s.format(t="Sheet1.sheet") for s in sqls.values()],
+        query_names=list(sqls))
+    QueryEngine(spark, str(tmp_path), [bundle],
+                str(tmp_path / "out")).process_queries()
+
+    con = sqlite3.connect(":memory:")
+    con.execute("CREATE TABLE t (company, region, qty)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
+    for name, sql in sqls.items():
+        got = sorted(tuple(r) for r in
+                     bundle.queried_dfs_by_query_name[name][0][1].collect())
+        assert got == sorted(con.execute(sql.format(t="t")).fetchall()), name
+    assert [r[:3] for r in sorted(con.execute(sqls["hi"].format(t="t")))] \
+        == [("A", "S", 5), ("B", "X", 9)]

@@ -7,6 +7,7 @@ standalone); in CI-with-reference this is the strongest parity proof —
 real input files, real golden queries, engine-vs-engine value equality.
 """
 
+import json
 import os
 import sqlite3
 
@@ -72,6 +73,68 @@ def test_engine_matches_sqlite_on_reference_data(spark, tmp_path, sqlite_results
             assert got == sqlite_results[key], qname
 
 
+def _json_blobs(data: bytes, marker: bytes = b'{"compressionMethod"'):
+    """Yield every parseable JSON document starting at ``marker`` in a
+    binary blob (brace-balanced scan, quote/escape aware)."""
+    i = 0
+    while True:
+        start = data.find(marker, i)
+        if start == -1:
+            return
+        depth, j, in_str, esc = 0, start, False, False
+        while j < len(data):
+            c = data[j]
+            if in_str:
+                if esc:
+                    esc = False
+                elif c == 0x5C:  # backslash
+                    esc = True
+                elif c == 0x22:  # quote
+                    in_str = False
+            else:
+                if c == 0x22:
+                    in_str = True
+                elif c == 0x7B:  # {
+                    depth += 1
+                elif c == 0x7D:  # }
+                    depth -= 1
+                    if depth == 0:
+                        j += 1
+                        break
+            j += 1
+        try:
+            yield json.loads(data[start:j].decode("utf-8", "replace"))
+        except ValueError:
+            pass
+        i = j
+
+
+def read_hyper_catalog(path: str) -> list[dict]:
+    """Read the table catalog embedded in a ``.hyper`` file WITHOUT
+    tableauhyperapi: Hyper files carry their catalog as a plain JSON
+    document (observed in the reference's golden
+    ``complaints_by_bank.hyper``: ``{"compressionMethod": …,
+    "relations": [{"name": …, "attributes": [{"name", "type"}…]}…]}``).
+    Multiple catalog snapshots may exist (pre/post table creation);
+    the one with the most relations — the final state — is returned as
+    ``[{"table": name, "columns": [(col_name, [type…])]}]``.
+
+    This is a read-only golden-file comparator, not a writer: the
+    package's write path still requires tableauhyperapi (hyperd speaks
+    a proprietary protocol).
+    """
+    with open(path, "rb") as f:
+        data = f.read()
+    best: list = []
+    for doc in _json_blobs(data):
+        rels = doc.get("relations", [])
+        if len(rels) > len(best):
+            best = rels
+    return [{"table": r["name"],
+             "columns": [(a["name"], a["type"]) for a in r["attributes"]]}
+            for r in best]
+
+
 def test_golden_hyper_schema_from_reference_data(spark, tmp_path):
     # the shipped complaints_by_bank.hyper pins these schemas (SURVEY §5.1)
     from etl_excel_to_hyper_tableau_spark.sinks.hyper import plan_hyper_tables
@@ -107,8 +170,7 @@ def test_golden_hyper_schema_from_reference_data(spark, tmp_path):
 
     # --- against the ACTUAL golden file's embedded catalog -----------------
     # (read without tableauhyperapi — the catalog is a plain JSON document
-    # inside the .hyper binary; sinks/hyper.py::read_hyper_catalog)
-    from etl_excel_to_hyper_tableau_spark.sinks.hyper import read_hyper_catalog
+    # inside the .hyper binary; read_hyper_catalog above)
     golden = {r["table"]: r["columns"]
               for r in read_hyper_catalog(f"{REF}/complaints_by_bank.hyper")}
     assert set(golden) == set(plans)

@@ -80,13 +80,15 @@ def test_mmr_prefers_diverse_over_redundant(spark):
     top-2 takes both near-duplicates; MMR with lam=0.5 takes one from
     each cluster."""
     from etl_excel_to_hyper_tableau_spark.operators.similarity import (
-        mmr_topk, topk_cosine,
+        mmr_topk, topk_cosine_batch,
     )
     q = [1.0, 1.0]
     rows = [(1, [1.0, 0.2]), (2, [1.0, 0.21]),   # cluster A (near-dups)
             (4, [0.2, 1.0])]                      # cluster B
     df = spark.createDataFrame(rows, "id long, emb array<double>")
-    plain = [r["id"] for r in topk_cosine(df, "emb", "id", q, k=2).collect()]
+    qs = spark.createDataFrame([(0, q)], "qid long, qv array<double>")
+    plain = [r["id"] for r in
+             topk_cosine_batch(df, qs, "emb", "id", "qv", "qid", k=2).collect()]
     assert set(plain) == {1, 2}             # redundant pair wins on rel
     sel = mmr_topk(df, "emb", "id", q, k=2, lam=0.5).collect()
     ids = [r["id"] for r in sorted(sel, key=lambda r: r["rank"])]

@@ -67,15 +67,6 @@ class TestStratifiedSample:
                                          {"en": .4, "zh": .4}).collect())
         assert small <= large
 
-    def test_exact_k_per_stratum(self, ids):
-        out = sp.exact_k_per_stratum(ids, "doc_id", "lang", k=7)
-        counts = {r["lang"]: r["n"] for r in
-                  out.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-        assert counts == {"en": 7, "zh": 7}
-        # deterministic across runs
-        again = sp.exact_k_per_stratum(ids, "doc_id", "lang", k=7)
-        assert sorted(map(tuple, out.collect())) == sorted(map(tuple, again.collect()))
-
     def test_sample_to_mixture(self, ids):
         # ids: 500 en / 1500 zh.  Target 50/50 of 400 → keep ~200 of
         # each; en thinned 200/500, zh 200/1500

@@ -6,7 +6,7 @@ import math
 import pytest
 
 from etl_excel_to_hyper_tableau_spark.operators.similarity import (
-    ann_topk_lsh, topk_cosine, topk_cosine_batch,
+    ann_topk_lsh, topk_cosine_batch,
 )
 
 
@@ -18,8 +18,10 @@ def corpus(spark):
     return spark.createDataFrame(rows, "id long, emb array<double>")
 
 
-def test_topk_cosine_exact_order(corpus):
-    out = topk_cosine(corpus, "emb", "id", [1.0, 0.0], k=3).collect()
+def test_topk_cosine_exact_order(spark, corpus):
+    qs = spark.createDataFrame([(1, [1.0, 0.0])], "qid long, qv array<double>")
+    out = sorted(topk_cosine_batch(corpus, qs, "emb", "id", "qv", "qid",
+                                   k=3).collect(), key=lambda r: r["rank"])
     assert [r["id"] for r in out] == [0, 1, 2]
     assert out[0]["cosine"] == pytest.approx(1.0)
     assert out[1]["cosine"] == pytest.approx(math.cos(math.radians(10)))

@@ -11,6 +11,8 @@ import __spark_entry__ as entry
 import pytest
 from pyspark.sql import functions as F
 
+from etl_excel_to_hyper_tableau_spark.operators import sketches
+
 
 def test_sketch_estimates_within_error_bounds(spark, sf_dir):
     row = entry.q_sketch_profile(spark, sf_dir).collect()[0]
@@ -128,9 +130,39 @@ def test_hll_estimate_py_matches_sql_estimator(spark, sf_dir):
     assert got["estimate"] == want["estimate"]
 
 
+def _histogram_quantiles_model(cells, bins: int,
+                           qs: tuple[float, ...] = (0.5, 0.95, 0.99),
+                           round_to: int = 6) -> dict:
+    """Python model of ``histogram_quantiles`` over collected sketch
+    cells (``(bin, cnt, lo, hi, n)`` rows) — same
+    first-bin-reaching-``ceil(q·n)`` rule, same pinned interpolation
+    op order as the SQL oracle (``lo + (bin + (target - cum_before)
+    / cnt) * (hi - lo) / bins``), rounded at the boundary.  Returns
+    ``{q: estimate}`` (empty dict for an empty sketch)."""
+    if not cells:
+        return {}
+    rows = sorted((int(r[0]), int(r[1])) for r in cells)
+    lo, hi, n = float(cells[0][2]), float(cells[0][3]), int(cells[0][4])
+    out = {}
+    for q in qs:
+        target = int(-(-q * n // 1))  # ceil(q*n), same float multiply as SQL
+        cum = 0
+        for b, cnt in rows:
+            if cum + cnt >= target:
+                if hi == lo:
+                    out[q] = lo
+                else:
+                    out[q] = sketches._round_half_up(
+                        lo + (b + (target - cum) / cnt)
+                        * (hi - lo) / float(bins), round_to)
+                break
+            cum += cnt
+    return out
+
+
 def test_histogram_quantiles_py_matches_sql_estimator(spark, sf_dir):
     from etl_excel_to_hyper_tableau_spark.operators.sketches import (
-        histogram_quantiles, histogram_quantiles_py, histogram_sketch,
+        histogram_quantiles, histogram_sketch,
     )
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     sk = histogram_sketch(li, "l_extendedprice", bins=128)
@@ -139,7 +171,7 @@ def test_histogram_quantiles_py_matches_sql_estimator(spark, sf_dir):
                                          (0.25, 0.5, 0.99)).collect()}
     cells = [(r["bin"], r["cnt"], r["lo"], r["hi"], r["n"])
              for r in sk.collect()]
-    got = histogram_quantiles_py(cells, 128, (0.25, 0.5, 0.99))
+    got = _histogram_quantiles_model(cells, 128, (0.25, 0.5, 0.99))
     assert got == want
 
 

@@ -1,32 +1,17 @@
 """Skew-handling operators: salted join correctness (result-equality
-with the plain join under a pathologically hot key) and bucketed
-staging (the co-located-join plan property: no Exchange on either
-side of an equi-join between two tables bucketed on the join key)."""
+with the plain join under a pathologically hot key), the key-skew
+report and bloom-filter pruning."""
 
 from __future__ import annotations
 
-import contextlib
-import io
-
 from pyspark.sql import functions as F
 
-from etl_excel_to_hyper_tableau_spark.operators.skew import (
-    read_bucketed,
-    salted_join,
-    stage_bucketed,
-)
+from etl_excel_to_hyper_tableau_spark.operators.skew import salted_join
 
 
 def _rows(df):
     cols = sorted(df.columns)
     return sorted(tuple(r) for r in df.select(*cols).collect())
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -64,33 +49,6 @@ def test_salted_join_rejects_bad_factor(spark):
     except ValueError:
         return
     raise AssertionError("salt_factor=0 must raise")
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path_factory):
-    # Both sides bucketed on the join key with the same bucket count:
-    # the sort-merge join must run with zero Exchange operators.
-    orders = spark.range(200).select(
-        F.col("id").alias("o_custkey"), (F.col("id") * 3).alias("o_total"))
-    cust = spark.range(100).select(
-        F.col("id").alias("c_custkey"), F.concat(F.lit("c"), F.col("id")).alias("c_name"))
-
-    stage_bucketed(orders, "bkt_orders", "o_custkey", buckets=4)
-    stage_bucketed(cust, "bkt_cust", "c_custkey", buckets=4, sort_by="c_custkey")
-
-    left = read_bucketed(spark, "bkt_orders")
-    right = read_bucketed(spark, "bkt_cust")
-    # disable broadcast so the co-location (not a broadcast) is what
-    # removes the shuffle
-    joined = left.hint("merge").join(
-        right, left.o_custkey == right.c_custkey, "inner")
-    plan = _plan(joined)
-    assert "Exchange" not in plan, plan
-    assert _rows(joined.select("o_custkey", "o_total", "c_name")) == _rows(
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .select("o_custkey", "o_total", "c_name"))
-
-    spark.sql("DROP TABLE IF EXISTS bkt_orders")
-    spark.sql("DROP TABLE IF EXISTS bkt_cust")
 
 
 def test_key_skew_report_flags_hot_key(spark):

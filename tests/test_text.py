@@ -1,11 +1,11 @@
-"""Text-analysis operators: language ID, quality, token counts,
-fingerprints — deterministic hand-checkable values."""
+"""Text-analysis operators: language ID, quality, token counts —
+deterministic hand-checkable values."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from etl_excel_to_hyper_tableau_spark.operators.text import (
-    detect_language, fingerprint64, quality_features, quality_score,
+    detect_language, quality_features, quality_score,
     text_profile, token_count, word_token_count,
 )
 
@@ -53,14 +53,6 @@ def test_quality_score_bounds_and_ordering(spark):
     bad = "@#$% ^&*! ~~~"
     gs, bs = _one(spark, good, quality_score), _one(spark, bad, quality_score)
     assert 0.0 <= bs < gs <= 1.0
-
-
-def test_fingerprint_deterministic_and_order_sensitive(spark):
-    a = _one(spark, "alpha beta gamma", fingerprint64)
-    b = _one(spark, "alpha beta gamma", fingerprint64)
-    c = _one(spark, "gamma beta alpha", fingerprint64)
-    assert a == b != c
-    assert 0 <= a < (1 << 61) - 1
 
 
 def test_text_profile_shape(spark):

@@ -1,17 +1,15 @@
 """WARC codec + source: record round trips (plain and per-record
-gzip), HTTP payload split, malformed-input quarantine, the distributed
-directory scan, and the binary-column parse."""
+gzip), HTTP payload split, malformed-input quarantine, and the distributed
+binary-column parse."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import Row, functions as F
 
 from etl_excel_to_hyper_tableau_spark.functions import warc as w
 from etl_excel_to_hyper_tableau_spark.sources.warc import (
-    make_warc_media, parse_warc_column, read_warc_dir,
+    make_warc_media, parse_warc_column,
 )
 
 
@@ -83,24 +81,6 @@ def test_malformed_raises():
 # Spark source paths
 # ---------------------------------------------------------------------------
 
-def test_read_warc_dir(spark, tmp_path):
-    for i in range(3):
-        recs = [("warcinfo", {}, b"info"),
-                _resp(f"http://site/{i}/0", f"body {i} zero".encode()),
-                _resp(f"http://site/{i}/1", f"body {i} one".encode())]
-        (tmp_path / f"part{i}.warc.gz").write_bytes(
-            w.build_warc(recs, per_record_gzip=True))
-    # one broken archive — quarantined, not fatal
-    (tmp_path / "junk.warc.gz").write_bytes(b"\x1f\x8bnot really gzip")
-    out = read_warc_dir(spark, str(tmp_path)).collect()
-    assert len(out) == 6  # 2 responses × 3 files; warcinfo + junk dropped
-    rows = {(r["url"]): (r["record_idx"], r["status"],
-                         bytes(r["body"]).decode()) for r in out}
-    assert rows["http://site/1/0"] == (1, 200, "body 1 zero")
-    assert rows["http://site/2/1"] == (2, 200, "body 2 one")
-    assert all(os.path.basename(r["source_file"]).startswith("part")
-               for r in out)
-
 
 def test_parse_warc_column_round_trip(spark):
     df = spark.createDataFrame(
@@ -113,9 +93,3 @@ def test_parse_warc_column_round_trip(spark):
     assert got[8] == ("http://example.com/doc/8", 200, "")
 
 
-def test_scan_plan_is_map_only(spark, tmp_path):
-    (tmp_path / "a.warc").write_bytes(w.build_warc([_resp("http://a", b"x")]))
-    plan = (read_warc_dir(spark, str(tmp_path))
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Exchange" not in plan
-    assert plan.count("MapInPandas") == 1
