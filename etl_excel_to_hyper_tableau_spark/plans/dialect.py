@@ -223,78 +223,106 @@ def sqlite_to_spark(sql: str) -> str:
 
 _SELECT_RE = re.compile(r"\bSELECT\b(\s+(ALL|DISTINCT)\b)?", re.IGNORECASE)
 _MINMAX_RE = re.compile(r"\b(min|max)\s*\(", re.IGNORECASE)
+# what ends a SELECT's select list (FROM) or its whole block (a compound
+# operator, or the parenthesis closing a CTE or subquery), and GROUP BY
+_BLOCK_TOKEN_RE = re.compile(r"[()]|\b(FROM|UNION|INTERSECT|EXCEPT)\b|\bGROUP\s+BY\b",
+                             re.IGNORECASE)
 
 
-def _single_minmax(select_list: str) -> tuple[str, str] | None:
-    """``(fn, arg)`` when the select list holds exactly one
-    one-argument ``min``/``max`` aggregate outside any subquery, else
-    None.  Two-argument ``max(a, b)`` is SQLite's scalar form and
+def _select_blocks(code: str):
+    """``(list_start, list_end, block_end, grouped)`` for each SELECT in
+    masked ``code``: where its select list starts and ends (its FROM),
+    where its block ends, and whether the block has a GROUP BY."""
+    for sel in _SELECT_RE.finditer(code):
+        start = sel.end()
+        depth, from_at, end, grouped = 0, None, len(code), False
+        for m in _BLOCK_TOKEN_RE.finditer(code, start):
+            tok = m.group(0).upper()
+            if tok == "(":
+                depth += 1
+            elif tok == ")":
+                depth -= 1
+                if depth < 0:
+                    end = m.start()
+                    break
+            elif depth == 0:
+                if tok == "FROM":
+                    from_at = m.start() if from_at is None else from_at
+                elif tok.startswith("GROUP"):
+                    grouped = True
+                else:
+                    end = m.start()
+                    break
+        yield start, end if from_at is None else from_at, end, grouped
+
+
+def _single_minmax(block: str) -> tuple[str, str] | None:
+    """``(fn, arg)`` when a SELECT block (its select list, ``HAVING`` and
+    ``ORDER BY``) holds exactly one distinct one-argument ``min``/``max``
+    aggregate outside any subquery, else None.  As in SQLite, the same
+    aggregate written twice (``max(qty)`` selected and in ``HAVING``)
+    counts once.  Two-argument ``max(a, b)`` is SQLite's scalar form and
     ``max(x) OVER (...)`` a window function; neither counts."""
-    calls = []
-    for m in _MINMAX_RE.finditer(select_list):
+    calls = {}
+    for m in _MINMAX_RE.finditer(block):
         opens = []
-        for i, c in enumerate(select_list[:m.start()]):
+        for i, c in enumerate(block[:m.start()]):
             if c == "(":
                 opens.append(i)
             elif c == ")" and opens:
                 opens.pop()
-        if any(re.match(r"\(\s*SELECT\b", select_list[i:], re.IGNORECASE)
+        if any(re.match(r"\(\s*SELECT\b", block[i:], re.IGNORECASE)
                for i in opens):
             continue
         depth, j = 1, m.end()
-        while j < len(select_list) and depth:
-            depth += {"(": 1, ")": -1}.get(select_list[j], 0)
+        while j < len(block) and depth:
+            depth += {"(": 1, ")": -1}.get(block[j], 0)
             j += 1
-        args = _top_level_split(select_list[m.end():j - 1])
-        if len(args) == 1 and not re.match(r"\s*OVER\b", select_list[j:],
+        args = _top_level_split(block[m.end():j - 1])
+        if len(args) == 1 and not re.match(r"\s*OVER\b", block[j:],
                                             re.IGNORECASE):
+            fn = m.group(1).lower()
             arg = re.sub(r"^\s*(DISTINCT|ALL)\b", "", args[0],
-                         flags=re.IGNORECASE)
-            calls.append((m.group(1).lower(), arg.strip()))
-    return calls[0] if len(calls) == 1 else None
+                         flags=re.IGNORECASE).strip()
+            calls.setdefault((fn, re.sub(r"\s+", "", arg).lower()), (fn, arg))
+    return next(iter(calls.values())) if len(calls) == 1 else None
 
 
 def rewrite_bare_column(sql: str, column: str) -> str:
     """Wrap one bare select-list item in an aggregate ``AS name`` — the
     Spark expression of SQLite's bare-columns-in-aggregate rule
-    (SURVEY §2C aggregation delta).  When the select list holds exactly
-    one ``min(x)``/``max(x)`` aggregate, SQLite takes bare columns from
-    the row that holds the extreme, so the item becomes
-    ``min_by(item, x)``/``max_by(item, x)``; otherwise any in-group
-    row's value will do and it becomes ``any_value(item)``.
+    (SURVEY §2C aggregation delta).  When the SELECT block holds exactly
+    one ``min(x)``/``max(x)`` aggregate (in its select list, ``HAVING``
+    or ``ORDER BY``), SQLite takes bare columns from the row that holds
+    the extreme, so the item becomes ``min_by(item, x)``/
+    ``max_by(item, x)``; otherwise any in-group row's value will do and
+    it becomes ``any_value(item)``.
 
     Only exact top-level select-list items matching ``column`` (or
     ``alias.column``) are rewritten, so occurrences inside function
-    calls and other clauses are never touched.  Driven by
-    :class:`QueryEngine`'s retry on Catalyst's MISSING_AGGREGATION
-    error rather than by parsing GROUP BY ourselves — the analyzer is
-    the single source of truth for which items are bare.
+    calls and other clauses are never touched.  The SELECT rewritten is
+    the first whose block has a ``GROUP BY`` and such an item (in a
+    ``WITH`` query that is the aggregating one, not the CTE's), else the
+    first with such an item.  Driven by :class:`QueryEngine`'s retry on
+    Catalyst's MISSING_AGGREGATION error rather than by parsing GROUP BY
+    ourselves — the analyzer is the single source of truth for which
+    items are bare; a block whose item was not bare is unchanged in
+    meaning, and the next retry moves on to the next block.
     """
     code, literals = _mask_literals(sql)
-    sel = _SELECT_RE.search(code)
-    if not sel:
-        return sql
-    # find the FROM that closes this select list (top-level paren depth)
-    depth, from_at = 0, None
-    for m in re.finditer(r"[()]|\bFROM\b", code[sel.end():], re.IGNORECASE):
-        tok = m.group(0)
-        if tok == "(":
-            depth += 1
-        elif tok == ")":
-            depth -= 1
-        elif depth == 0:
-            from_at = sel.end() + m.start()
-            break
-    select_list = code[sel.end():from_at] if from_at else code[sel.end():]
-    extreme = _single_minmax(select_list)
     item_re = re.compile(rf"^(\w+\.)?{re.escape(column)}$", re.IGNORECASE)
+    blocks = [b for b in _select_blocks(code)
+              if any(item_re.match(it.strip()) for it in _top_level_split(code[b[0]:b[1]]))]
+    if not blocks:
+        return sql
+    start, list_end, end, _ = next((b for b in blocks if b[3]), blocks[0])
+    extreme = _single_minmax(code[start:end])
     items = []
-    for it in _top_level_split(select_list):
+    for it in _top_level_split(code[start:list_end]):
         if item_re.match(it.strip()):
             agg = (f"{extreme[0]}_by({it.strip()}, {extreme[1]})" if extreme
                    else f"any_value({it.strip()})")
-            it = f" {agg} AS {column}"
+            it = it.replace(it.strip(), f"{agg} AS {column}")
         items.append(it)
-    end = from_at if from_at else len(code)
-    code = code[:sel.end()] + ",".join(items) + code[end:]
+    code = code[:start] + ",".join(items) + code[list_end:]
     return _unmask(code, literals)

@@ -100,6 +100,45 @@ def test_rewrite_bare_column_takes_the_single_min_max_row(select, wrapped):
     assert f"{wrapped} AS region" in out
 
 
+def test_rewrite_bare_column_keeps_the_space_before_from():
+    out = rewrite_bare_column("SELECT company, region FROM t GROUP BY company",
+                              "region")
+    assert out == ("SELECT company, any_value(region) AS region FROM t "
+                   "GROUP BY company")
+
+
+@pytest.mark.parametrize("sql, wrapped", [
+    ("SELECT company, region FROM t GROUP BY company HAVING max(qty) > 0",
+     "max_by(region, qty)"),
+    ("SELECT company, region FROM t GROUP BY company ORDER BY MIN( qty )",
+     "min_by(region, qty)"),
+    # the same aggregate twice is one aggregate, as in SQLite
+    ("SELECT company, region, max(qty) FROM t GROUP BY company "
+     "HAVING MAX( qty ) > 0", "max_by(region, qty)"),
+    ("SELECT company, region, max(qty) FROM t GROUP BY company "
+     "HAVING min(qty) > 0", "any_value(region)"),
+    # a min/max in the CTE or a subquery belongs to another block
+    ("WITH x AS (SELECT max(qty) AS q FROM t) SELECT company, region "
+     "FROM t, x GROUP BY company", "any_value(region)"),
+], ids=["having", "order_by", "repeated", "having_other_extreme", "cte"])
+def test_rewrite_bare_column_reads_the_whole_block(sql, wrapped):
+    assert f"{wrapped} AS region" in rewrite_bare_column(sql, "region")
+
+
+def test_rewrite_bare_column_picks_the_grouped_select():
+    sql = ("WITH x AS (SELECT company, region, qty FROM s) "
+           "SELECT company, region, COUNT(*) AS n FROM x GROUP BY company")
+    assert rewrite_bare_column(sql, "region") == (
+        "WITH x AS (SELECT company, region, qty FROM s) "
+        "SELECT company, any_value(region) AS region, COUNT(*) AS n FROM x "
+        "GROUP BY company")
+    # a compound's second arm, when the first is not grouped
+    sql = "SELECT region FROM s UNION SELECT region FROM u GROUP BY c"
+    assert rewrite_bare_column(sql, "region") == (
+        "SELECT region FROM s UNION SELECT any_value(region) AS region FROM u "
+        "GROUP BY c")
+
+
 def test_literal_masking_preserves_escaped_quotes():
     sql = "SELECT 'it''s' FROM t WHERE a LIKE 'o''brien%'"
     out = sqlite_to_spark(sql)

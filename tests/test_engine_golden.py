@@ -180,60 +180,78 @@ def test_match_is_a_literal_substring():
         == "report[2024].xlsx"
 
 
-def test_recursive_union_retries_bare_columns_like_sqlite(spark, tmp_path):
-    # SQLite's bare-column rule holds inside a UNION-distinct recursive
-    # CTE too: region is neither grouped nor aggregated in the base arm
+def _sqlite_pairs(spark, tmp_path, rows, sqls):
+    """Run each of ``sqls`` (``{t}`` for the table) through the engine on
+    one sheet of ``rows`` and through stdlib sqlite3; return the sorted
+    (engine, sqlite3) rows per query name."""
     import sqlite3
 
-    cols, rows = ["company", "region", "qty"], [["A", "N", 1], ["A", "N", 2],
-                                                ["B", "S", 3]]
     xlsx_io.write_workbook(str(tmp_path / "sales.xlsx"),
-                           [("Sheet1", cols, rows)])
-    sql = ("WITH RECURSIVE r(c, reg, n) AS (SELECT company, region, COUNT(*) "
-           "FROM {t} GROUP BY company UNION SELECT c, reg, n + 1 FROM r "
-           "WHERE n < 3) SELECT c, reg, n FROM r")
-    bundle = QueryBundle.from_strings(
-        export_name="x", sink="parquet", matches=["sales"], sheets=["Sheet1"],
-        query_strings=[sql.format(t="Sheet1.sheet")], query_names=["q"])
-    QueryEngine(spark, str(tmp_path), [bundle],
-                str(tmp_path / "out")).process_queries()
-    got = sorted(tuple(r) for r in
-                 bundle.queried_dfs_by_query_name["q"][0][1].collect())
-
-    con = sqlite3.connect(":memory:")
-    con.execute("CREATE TABLE t (company, region, qty)")
-    con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
-    want = sorted(con.execute(sql.format(t="t")).fetchall())
-    assert len(want) == 5 and got == want
-
-
-def test_min_max_bare_columns_come_from_the_extreme_row_like_sqlite(
-        spark, tmp_path):
-    # with exactly one min()/max() aggregate, SQLite takes a bare column
-    # from the row that holds the extreme, not from an arbitrary row
-    import sqlite3
-
-    cols = ["company", "region", "qty"]
-    rows = [["A", "N", 1], ["A", "S", 5], ["A", "E", 3], ["B", "W", 2],
-            ["B", "X", 9]]
-    xlsx_io.write_workbook(str(tmp_path / "sales.xlsx"),
-                           [("Sheet1", cols, rows)])
-    sqls = {name: f"SELECT company, region, {fn}(qty) AS m, COUNT(*) AS n "
-                  "FROM {t} GROUP BY company"
-            for name, fn in (("hi", "MAX"), ("lo", "MIN"))}
+                           [("Sheet1", ["company", "region", "qty"], rows)])
     bundle = QueryBundle.from_strings(
         export_name="x", sink="parquet", matches=["sales"], sheets=["Sheet1"],
         query_strings=[s.format(t="Sheet1.sheet") for s in sqls.values()],
         query_names=list(sqls))
     QueryEngine(spark, str(tmp_path), [bundle],
                 str(tmp_path / "out")).process_queries()
-
     con = sqlite3.connect(":memory:")
     con.execute("CREATE TABLE t (company, region, qty)")
     con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
-    for name, sql in sqls.items():
-        got = sorted(tuple(r) for r in
-                     bundle.queried_dfs_by_query_name[name][0][1].collect())
-        assert got == sorted(con.execute(sql.format(t="t")).fetchall()), name
-    assert [r[:3] for r in sorted(con.execute(sqls["hi"].format(t="t")))] \
-        == [("A", "S", 5), ("B", "X", 9)]
+    return {name: (sorted(tuple(r) for r in
+                          bundle.queried_dfs_by_query_name[name][0][1].collect()),
+                   sorted(con.execute(sql.format(t="t")).fetchall()))
+            for name, sql in sqls.items()}
+
+
+def test_recursive_union_retries_bare_columns_like_sqlite(spark, tmp_path):
+    # SQLite's bare-column rule holds inside a UNION-distinct recursive
+    # CTE too: region is neither grouped nor aggregated in the base arm
+    got = _sqlite_pairs(spark, tmp_path, [["A", "N", 1], ["A", "N", 2], ["B", "S", 3]], {
+        "q": "WITH RECURSIVE r(c, reg, n) AS (SELECT company, region, COUNT(*) "
+             "FROM {t} GROUP BY company UNION SELECT c, reg, n + 1 FROM r "
+             "WHERE n < 3) SELECT c, reg, n FROM r"})
+    engine, lite = got["q"]
+    assert len(lite) == 5 and engine == lite
+
+
+_EXTREME_ROWS = [["A", "N", 1], ["A", "S", 5], ["A", "E", 3], ["B", "W", 2], ["B", "X", 9]]
+
+
+def test_min_max_bare_columns_come_from_the_extreme_row_like_sqlite(
+        spark, tmp_path):
+    # with exactly one min()/max() aggregate, SQLite takes a bare column
+    # from the row that holds the extreme, not from an arbitrary row
+    got = _sqlite_pairs(spark, tmp_path, _EXTREME_ROWS, {
+        name: f"SELECT company, region, {fn}(qty) AS m, COUNT(*) AS n "
+              "FROM {t} GROUP BY company"
+        for name, fn in (("hi", "MAX"), ("lo", "MIN"))})
+    for name, (engine, lite) in got.items():
+        assert engine == lite, name
+    assert [r[:3] for r in got["hi"][1]] == [("A", "S", 5), ("B", "X", 9)]
+
+
+def test_with_query_retries_the_aggregating_select_like_sqlite(spark, tmp_path):
+    # the bare column sits in the main SELECT, not in the CTE's
+    got = _sqlite_pairs(spark, tmp_path, [["A", "N", 1], ["A", "N", 2], ["B", "W", 3]], {
+        "q": "WITH x AS (SELECT company, region, qty FROM {t}) "
+             "SELECT company, region, COUNT(*) AS n FROM x GROUP BY company"})
+    assert got["q"][1] == [("A", "N", 2), ("B", "W", 1)]
+    assert got["q"][0] == got["q"][1]
+
+
+def test_min_max_in_having_or_order_by_picks_the_extreme_row_like_sqlite(
+        spark, tmp_path):
+    # a single min()/max() selects the row wherever the block holds it; the
+    # same max(qty) selected and in HAVING is still one aggregate
+    got = _sqlite_pairs(spark, tmp_path, _EXTREME_ROWS, {
+        "having": "SELECT company, region FROM {t} GROUP BY company "
+                  "HAVING max(qty) > 0",
+        "repeated": "SELECT company, region, max(qty) AS m FROM {t} "
+                    "GROUP BY company HAVING max(qty) > 0",
+        "order_by": "SELECT company, region FROM {t} GROUP BY company "
+                    "ORDER BY min(qty)"})
+    assert got["having"][1] == [("A", "S"), ("B", "X")]
+    assert got["repeated"][1] == [("A", "S", 5), ("B", "X", 9)]
+    assert got["order_by"][1] == [("A", "N"), ("B", "W")]
+    for name, (engine, lite) in got.items():
+        assert engine == lite, name
