@@ -13,10 +13,15 @@ Two layers close that hole:
   evaluator: start from the base relation, repeatedly apply the step
   to the rows added in the previous round (the "working table", as in
   the SQL standard), keep only never-seen rows, stop when a round adds
-  nothing.  Each round is one distributed job; the driver holds no
-  data — only the loop counter.  ``localCheckpoint`` truncates the
-  lineage every round so the plan doesn't grow unboundedly (the
-  classic iterative-algorithm failure mode on Spark).
+  nothing.  The loop runs on the driver, where one file's recursion
+  already fits: the frontier and the accumulator are Arrow tables,
+  each round hands the step a local relation and collects its output
+  once (a plan over local relations collects without a Spark job), and
+  new rows are found in a Python key set under SQL ``UNION`` row
+  equality.  The accumulator is capped at
+  :data:`~..operators.combinators.MAX_CONCAT_ROWS`, the driver-collect
+  cap the concat and the Excel sink share.  Nothing is cached or
+  checkpointed, so a call leaves no persisted RDD behind.
 * :func:`run_recursive_union_sql` — the SQL front door: parses the
   single-CTE ``WITH RECURSIVE name(cols) AS (base UNION step) main``
   shape at the string level (literal-masked, balanced-paren scan —
@@ -32,7 +37,33 @@ import re
 import uuid
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+# the converter Spark Connect's createDataFrame uses for local rows:
+# collect()'s Rows in, an Arrow table for a local relation out
+from pyspark.sql.conversion import LocalDataToArrowConversion
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from ..operators.combinators import MAX_CONCAT_ROWS
+
+_NAN = object()  # the one key every NaN maps to
+
+
+def _key(value):
+    """A hashable key under SQL ``UNION`` row equality, the grouping
+    normalization Spark's ``distinct`` applies: NULL = NULL (``None``),
+    −0.0 = 0.0 (Python's own float equality and hash), NaN = NaN (one
+    sentinel), arrays and structs compared element-wise as tuples, maps
+    as sets of entries, binary as bytes."""
+    if isinstance(value, float):
+        return _NAN if value != value else value
+    if isinstance(value, (tuple, list)):  # a Row is a tuple
+        return tuple(_key(v) for v in value)
+    if isinstance(value, dict):
+        return frozenset((_key(k), _key(v)) for k, v in value.items())
+    if isinstance(value, bytearray):
+        return bytes(value)
+    return value
 
 
 def recursive_fixpoint(base: DataFrame,
@@ -44,31 +75,58 @@ def recursive_fixpoint(base: DataFrame,
     both the semantics and the efficiency of SQL engines' recursive
     evaluation.
 
-    ``step`` maps a DataFrame to a DataFrame with the same schema
-    (checked).  Rows are compared whole-row for the dedup, as UNION
-    does.  Raises after ``max_iterations`` rounds to guard against
-    non-terminating recursion (SQLite's equivalent guard is
-    ``SQLITE_LIMIT_WORKER_THREADS``-less infinite loop protection via
-    LIMIT — callers there typically add one; here the bound is
-    explicit).
+    ``step`` maps a DataFrame to a DataFrame with the same column names
+    and types (checked).  ``base`` is collected once; each round passes
+    ``step`` a local relation of the new rows and collects its output
+    once.  Rows are compared whole-row, as UNION does, and duplicates
+    within the base are dropped too: NULL equals NULL, −0.0 equals 0.0,
+    NaN equals NaN, and nested values compare element by element.
+    Recursion stops when a round adds no row.  Raises ``ValueError``
+    when the result would exceed ``MAX_CONCAT_ROWS`` rows, and
+    ``RuntimeError`` when round ``max_iterations`` still adds rows, to
+    guard against non-terminating recursion.
+
+    Returns a local relation of the distinct rows, in the order first
+    seen, with every column nullable.
     """
-    acc = base.localCheckpoint(eager=True)
-    frontier = acc
+    spark = base.sparkSession
     base_shape = [(f.name, f.dataType) for f in base.schema.fields]
+    schema = T.StructType([T.StructField(n, t, True) for n, t in base_shape])
+    seen: set = set()
+    acc: list[pa.Table] = []
+
+    def add_new(rows) -> pa.Table | None:
+        new = []
+        for row in rows:
+            k = _key(row)
+            if k not in seen:
+                seen.add(k)
+                new.append(row)
+        if not new:
+            return None
+        if len(seen) > MAX_CONCAT_ROWS:
+            raise ValueError(
+                f"recursive CTE exceeds {MAX_CONCAT_ROWS} rows (MAX_CONCAT_ROWS, "
+                "the driver-collect cap); collecting it would exhaust driver memory")
+        acc.append(LocalDataToArrowConversion.convert(new, schema, False))
+        return acc[-1]
+
+    frontier = add_new(base.collect())
     for _ in range(max_iterations):
-        new = step(frontier)
+        if frontier is None:
+            break
+        new = step(spark.createDataFrame(frontier, schema))
         # compare (name, type) — nullability legitimately differs between
-        # a checkpointed base and a freshly-analyzed step output
+        # the base and a freshly-analyzed step output
         if [(f.name, f.dataType) for f in new.schema.fields] != base_shape:
             raise ValueError(
                 f"step changed the schema: {new.schema.simpleString()} != "
                 f"{base.schema.simpleString()}")
-        new = new.exceptAll(acc).distinct().localCheckpoint(eager=True)
-        if new.isEmpty():
-            return acc
-        acc = acc.unionByName(new).localCheckpoint(eager=True)
-        frontier = new
-    raise RuntimeError(f"no fixpoint after {max_iterations} iterations")
+        frontier = add_new(new.collect())
+    if frontier is not None:
+        raise RuntimeError(f"no fixpoint after {max_iterations} iterations")
+    table = pa.concat_tables(acc) if acc else to_arrow_schema(schema).empty_table()
+    return spark.createDataFrame(table, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -146,11 +204,11 @@ def run_recursive_union_sql(spark: SparkSession, sql: str,
     """Evaluate a UNION-distinct ``WITH RECURSIVE`` by driving
     :func:`recursive_fixpoint`: the base arm seeds the accumulator, the
     recursive arm re-runs each round against the previous round's new
-    rows (registered as a temp view in place of the CTE name), and the
-    main query runs over the accumulated fixpoint.  Dedup across rounds
-    is what makes cyclic graphs terminate — the semantics SQLite users
-    rely on for closures.  The UNION ALL form raises ``ValueError``:
-    ``spark.sql`` runs it natively.
+    rows (a local relation registered as a temp view in place of the CTE
+    name), and the main query runs over the accumulated fixpoint, a
+    local relation too.  Dedup across rounds is what makes cyclic graphs
+    terminate — the semantics SQLite users rely on for closures.  The
+    UNION ALL form raises ``ValueError``: ``spark.sql`` runs it natively.
 
     ``run_sql`` runs each of the three statements (base, step, main);
     the engine passes its own runner so the arms get the same SQLite
@@ -178,10 +236,7 @@ def run_recursive_union_sql(spark: SparkSession, sql: str,
     base = run_sql(base_sql)
     if cols:
         base = base.toDF(*cols)
-    base = base.distinct()  # SQL UNION dedups the base arm too
     step_tmpl = name_re.sub(frontier_view, step_sql)
-
-    from pyspark.sql import functions as F
 
     def step(frontier: DataFrame) -> DataFrame:
         frontier.createOrReplaceTempView(frontier_view)

@@ -5,9 +5,10 @@ writes through ``pd.DataFrame.to_excel`` (query_iterator.py:210), both of
 which require openpyxl.  This container ships neither openpyxl nor xlrd,
 so the engine carries its own minimal OOXML SpreadsheetML implementation:
 
-* reader: handles shared strings, inline strings, numbers, booleans and
-  blank cells; returns ``(columns, rows)`` with the first sheet row as
-  the header (matching ``pd.read_excel`` defaults);
+* reader: handles shared strings, inline strings, numbers, booleans,
+  error and ISO-date cells (read as their text) and blank cells;
+  returns ``(columns, rows)`` with the first sheet row as the header
+  (matching ``pd.read_excel`` defaults);
 * writer: inline-string cells (no sharedStrings table needed), one
   worksheet per (name, columns, rows) tuple.
 
@@ -18,13 +19,18 @@ float; everything else stays ``str``; blanks → ``None``.
 
 from __future__ import annotations
 
+import gc
 import re
 import zipfile
+from contextlib import contextmanager
 from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape
 
 _NS = {"m": "http://schemas.openxmlformats.org/spreadsheetml/2006/main",
        "r": "http://schemas.openxmlformats.org/officeDocument/2006/relationships"}
+# the worksheet loop matches these namespaced tags directly
+_SHEET_DATA, _ROW, _C, _V, _IS, _T = (
+    f"{{{_NS['m']}}}{t}" for t in ("sheetData", "row", "c", "v", "is", "t"))
 
 
 def _col_to_idx(ref: str) -> int:
@@ -47,10 +53,26 @@ def _idx_to_col(idx: int) -> str:
     return out
 
 
+@contextmanager
+def _gc_paused():
+    """Pause the cyclic garbage collector.  Parsing a sheet allocates
+    about ten objects a cell and none of them in a cycle, so each
+    collection the allocations trigger finds nothing; in a process that
+    holds a Spark session's heap they doubled the parse of an
+    8,000-row sheet (0.12–0.18 s without them, 0.27–0.35 s with)."""
+    enabled = gc.isenabled()
+    gc.disable()
+    try:
+        yield
+    finally:
+        if enabled:
+            gc.enable()
+
+
 def read_sheet(path: str, sheet: str | int = 0) -> tuple[list[str], list[list]]:
     """Read one worksheet → (column_names, data_rows), the first row
     being the header."""
-    with zipfile.ZipFile(path) as zf:
+    with _gc_paused(), zipfile.ZipFile(path) as zf:
         wb = ET.fromstring(zf.read("xl/workbook.xml"))
         sheets = wb.findall("m:sheets/m:sheet", _NS)
         if isinstance(sheet, int):
@@ -71,39 +93,49 @@ def read_sheet(path: str, sheet: str | int = 0) -> tuple[list[str], list[list]]:
         if "xl/sharedStrings.xml" in zf.namelist():
             sst = ET.fromstring(zf.read("xl/sharedStrings.xml"))
             for si in sst.findall("m:si", _NS):
-                shared.append("".join(t.text or "" for t in si.iter(f"{{{_NS['m']}}}t")))
+                shared.append("".join(t.text or "" for t in si.iter(_T)))
 
         ws = ET.fromstring(zf.read(sheet_path))
         raw_rows: list[dict[int, object]] = []
         max_col = -1
-        for row_el in ws.findall("m:sheetData/m:row", _NS):
+        col_of: dict[str, int] = {}  # column letters → index
+        for row_el in ws.iterfind(f"{_SHEET_DATA}/{_ROW}"):
             cells: dict[int, object] = {}
-            for c_el in row_el.findall("m:c", _NS):
-                ref = c_el.attrib.get("r", "")
-                ci = _col_to_idx(ref) if ref else (max(cells) + 1 if cells else 0)
-                ctype = c_el.attrib.get("t", "n")
-                v_el = c_el.find("m:v", _NS)
+            for c_el in row_el:
+                if c_el.tag != _C:
+                    continue
+                ref = c_el.get("r")
+                if ref:
+                    letters = ref.rstrip("0123456789")
+                    ci = col_of.get(letters)
+                    if ci is None:
+                        ci = col_of[letters] = _col_to_idx(letters)
+                else:
+                    ci = max(cells) + 1 if cells else 0
+                ctype = c_el.get("t")
                 if ctype == "inlineStr":
-                    is_el = c_el.find("m:is", _NS)
-                    val = "".join(t.text or "" for t in is_el.iter(f"{{{_NS['m']}}}t")) if is_el is not None else None
-                elif v_el is None or v_el.text is None:
-                    val = None
-                elif ctype == "s":
-                    val = shared[int(v_el.text)]
-                elif ctype == "b":
-                    val = v_el.text == "1"
-                elif ctype == "str":
-                    val = v_el.text
-                else:  # numeric
-                    txt = v_el.text
-                    f = float(txt)
-                    val = int(f) if f.is_integer() and "e" not in txt.lower() and "." not in txt else f
+                    is_el = c_el.find(_IS)
+                    val = "".join(t.text or "" for t in is_el.iter(_T)) if is_el is not None else None
+                else:
+                    txt = c_el.findtext(_V)
+                    if not txt:
+                        val = None
+                    elif ctype is None or ctype == "n":
+                        f = float(txt)
+                        val = int(f) if f.is_integer() and "e" not in txt.lower() and "." not in txt else f
+                    elif ctype == "s":
+                        val = shared[int(txt)]
+                    elif ctype == "b":
+                        val = txt == "1"
+                    else:  # "str"; an error ("e") or ISO-date ("d") cell reads as its text
+                        val = txt
                 cells[ci] = val
-                max_col = max(max_col, ci)
+                if ci > max_col:
+                    max_col = ci
             raw_rows.append(cells)
 
-    width = max_col + 1
-    dense = [[r.get(i) for i in range(width)] for r in raw_rows]
+        width = max_col + 1
+        dense = [[r.get(i) for i in range(width)] for r in raw_rows]
     if not dense:
         return [], []
     cols = [str(c) if c is not None else f"Unnamed_{i}" for i, c in enumerate(dense[0])]

@@ -3,14 +3,17 @@ engine routing): Spark 4.1 runs the UNION ALL form natively; the
 UNION-distinct form — the SQLite cyclic-closure idiom — is driven
 through recursive_fixpoint.  DuckDB runs the identical SQL as oracle."""
 
+import sqlite3
+
 import duckdb
 import pytest
 
-from etl_excel_to_hyper_tableau_spark.bundles import Query
+from etl_excel_to_hyper_tableau_spark.bundles import Query, QueryBundle
 from etl_excel_to_hyper_tableau_spark.engine import QueryEngine
 from etl_excel_to_hyper_tableau_spark.plans.recursive import (
     is_recursive_union, run_recursive_union_sql,
 )
+from etl_excel_to_hyper_tableau_spark.sources import xlsx_io
 
 COUNTER_ALL = ("WITH RECURSIVE cnt(x) AS (SELECT 1 UNION ALL "
                "SELECT x + 1 FROM cnt WHERE x < 10) "
@@ -79,3 +82,55 @@ def test_union_distinct_leaves_no_temp_view(spark):
     assert views() == before
     # the returned frame is resolved already: it still runs after the drop
     assert [r["n"] for r in out.collect()] == [1, 2, 3]
+
+
+# SQL UNION row equality: a re-emitted NULL, −0.0 or NaN row is a
+# duplicate, so each of these recursions stops after one empty round;
+# UNION dedups the base arm's own rows too
+ROW_EQUALITY = {
+    "dup_base": ("WITH RECURSIVE r(x) AS (SELECT x FROM (SELECT 1 AS x UNION ALL "
+                 "SELECT 1 UNION ALL SELECT 2) UNION SELECT x FROM r) "
+                 "SELECT x FROM r ORDER BY x", True),
+    "null": ("WITH RECURSIVE r(n, tag) AS (SELECT 1, CAST(NULL AS INTEGER) UNION "
+             "SELECT CASE WHEN n < 3 THEN n + 1 ELSE n END, tag FROM r) "
+             "SELECT n, tag FROM r ORDER BY n", True),
+    "neg_zero": ("WITH RECURSIVE r(x) AS (SELECT CAST(0 AS DOUBLE) UNION "
+                 "SELECT -x FROM r) SELECT x FROM r", True),
+    # SQLite has no NaN (it stores NULL), so DuckDB alone is the oracle
+    "nan": ("WITH RECURSIVE r(x) AS (SELECT CAST('NaN' AS DOUBLE) UNION "
+            "SELECT x FROM r) SELECT count(*) AS n FROM r", False),
+}
+
+
+@pytest.mark.parametrize("case", sorted(ROW_EQUALITY))
+def test_union_distinct_row_equality_matches_sqlite_and_duckdb(spark, case):
+    sql, sqlite_can = ROW_EQUALITY[case]
+    got = [tuple(r) for r in
+           run_recursive_union_sql(spark, sql, spark.sql, max_iterations=5).collect()]
+    assert got == duckdb.connect().execute(sql).fetchall()
+    if sqlite_can:
+        assert got == sqlite3.connect(":memory:").execute(sql).fetchall()
+
+
+def test_pipeline_recursion_leaves_no_persisted_rdd(spark, tmp_path):
+    # the recursive query of the bulk_parse benchmark workload, run twice
+    rows = [[f"c{i % 4}", i] for i in range(40)]
+    xlsx_io.write_workbook(str(tmp_path / "f1.xlsx"), [("Sheet1", ["company", "qty"], rows)])
+    bundle = QueryBundle.from_strings(
+        "levels", "parquet", ["f1"], ["Sheet1"],
+        ["WITH RECURSIVE lvl(q) AS (SELECT DISTINCT qty % 3 FROM Sheet1.sheet "
+         "WHERE qty IS NOT NULL UNION SELECT q + 1 FROM lvl WHERE q < 3) "
+         "SELECT q FROM lvl"], ["levels"], pivot_by_name={"levels": True})
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        # compare ids, not counts: the ContextCleaner may unpersist
+        # RDDs of earlier tests at any moment during this one
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    for run in range(2):
+        QueryEngine(spark, str(tmp_path), [bundle], str(tmp_path / f"out{run}")).process_queries()
+        assert not persisted() - before, run
+    (_, df), = bundle.queried_dfs_by_query_name["levels"]
+    assert sorted(r["q"] for r in df.collect()) == [0, 1, 2, 3]

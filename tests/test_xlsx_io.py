@@ -1,5 +1,7 @@
 """The stdlib xlsx reader/writer and the Excel sources (SURVEY A1/A15)."""
 
+import zipfile
+
 import pytest
 from pyspark.sql import types as T
 
@@ -89,3 +91,69 @@ def test_read_excel_sheet_infers_types_from_every_row(spark, tmp_path):
     assert df.schema.simpleString() == "struct<x:double,y:string>"
     got = [tuple(r) for r in df.collect()]
     assert got == [(float(i), str(i)) for i in range(1000)] + [(2.5, "n/a")]
+
+
+_MAIN_NS = 'xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"'
+
+
+def _raw_book(path, sheet_data, shared=None, sheet_tail=""):
+    """A one-sheet workbook from hand-written SpreadsheetML: ``sheet_data``
+    is the inside of ``<sheetData>``, ``shared`` the inside of ``<sst>``."""
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr("xl/workbook.xml", (
+            f'<workbook {_MAIN_NS} xmlns:r="http://schemas.openxmlformats.org/'
+            'officeDocument/2006/relationships"><sheets>'
+            '<sheet name="Sheet1" sheetId="1" r:id="rId1"/></sheets></workbook>'))
+        zf.writestr("xl/_rels/workbook.xml.rels", (
+            '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/'
+            'relationships"><Relationship Id="rId1" Type="http://schemas.'
+            'openxmlformats.org/officeDocument/2006/relationships/worksheet" '
+            'Target="worksheets/sheet1.xml"/></Relationships>'))
+        if shared is not None:
+            zf.writestr("xl/sharedStrings.xml", f"<sst {_MAIN_NS}>{shared}</sst>")
+        zf.writestr("xl/worksheets/sheet1.xml",
+                    f"<worksheet {_MAIN_NS}><sheetData>{sheet_data}</sheetData>"
+                    f"{sheet_tail}</worksheet>")
+    return path
+
+
+def test_read_sheet_error_and_date_cells_read_as_text(tmp_path):
+    # an error cell and an ISO-date cell hold text in <v>, not a number;
+    # openpyxl hands pandas the error cell's text too
+    p = _raw_book(str(tmp_path / "typed.xlsx"), (
+        '<row r="1"><c r="A1" t="inlineStr"><is><t>ratio</t></is></c>'
+        '<c r="B1" t="inlineStr"><is><t>day</t></is></c></row>'
+        '<row r="2"><c r="A2" t="e"><v>#DIV/0!</v></c>'
+        '<c r="B2" t="d"><v>2024-01-31T00:00:00</v></c></row>'
+        '<row r="3"><c r="A3" t="e"><v>#N/A</v></c><c r="B3"><v>4</v></c></row>'))
+    assert xlsx_io.read_sheet(p, "Sheet1") == (
+        ["ratio", "day"], [["#DIV/0!", "2024-01-31T00:00:00"], ["#N/A", 4]])
+
+
+def test_read_sheet_edge_cases_keep_their_rows(tmp_path):
+    # cells without r (placed after the row's last cell), rich-text shared
+    # strings, t="str" / "b" / inlineStr, an empty <v>, a formula before
+    # its <v>, lowercase column letters and <extLst> children of a row and
+    # of the sheet; the expected rows are the reader's output before its
+    # per-cell loop was rewritten
+    p = _raw_book(str(tmp_path / "edge.xlsx"), (
+        '<row r="1"><c r="A1" t="s"><v>0</v></c><c r="B1" t="inlineStr"><is><t>flag</t></is></c>'
+        '<c t="str"><v>note</v></c>'
+        '<c r="D1" t="inlineStr"><is><r><t>x</t></r><r><t>y</t></r></is></c></row>'
+        '<row r="2"><c r="A2" t="s"><v>1</v></c><c r="B2" t="b"><v>1</v></c>'
+        '<c t="str"><v>formula text</v></c><c r="D2"><v>2.50</v></c></row>'
+        '<row r="3"><c t="s"><v>2</v></c><c t="b"><v>0</v></c><c r="D3"><v>7</v></c>'
+        '<extLst><ext uri="{X}"/></extLst></row>'
+        '<row r="4"><c r="A4" t="inlineStr"/><c r="B4"><v>1e3</v></c>'
+        '<c r="C4" t="str"><v></v></c><c r="D4"><f>1+1</f><v>2</v></c></row>'
+        '<row r="5"><c r="b5"><v>-4</v></c><c r="E5" t="s"><v>0</v></c></row>'),
+        shared=('<si><t>name</t></si>'
+                '<si><r><t>rich</t></r><r><rPr><b/></rPr><t xml:space="preserve"> text</t></r></si>'
+                '<si><t>plain</t></si>'),
+        sheet_tail='<extLst><ext uri="{Y}"/></extLst>')
+    assert xlsx_io.read_sheet(p, "Sheet1") == (
+        ["name", "flag", "note", "xy", "Unnamed_4"],
+        [["rich text", True, "formula text", 2.5, None],
+         ["plain", False, None, 7, None],
+         [None, 1000.0, None, 2, None],
+         [None, -4, None, None, "name"]])
