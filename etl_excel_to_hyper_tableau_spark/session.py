@@ -33,11 +33,13 @@ import os
 import shutil
 import subprocess
 import uuid
-from typing import NamedTuple
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable, Iterable, NamedTuple
 
 from pyspark import SparkContext, __version__ as _PYSPARK_VERSION
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 _DEFAULTS = {
     # AQE: coalesce small shuffle partitions, split skewed ones, re-plan
@@ -127,6 +129,31 @@ def get_spark(app_name: str = "etl_excel_to_hyper_tableau_spark",
         record_writer(spark, cds.dump)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_concurrently(spark: SparkSession, fn: Callable, items: Iterable) -> list:
+    """``[fn(item) for item in items]``, run on driver threads.
+
+    Meant for independent Spark actions whose cost is mostly driver-side
+    per-job overhead (analysis, planning, scheduling, result transfer):
+    run one after another they leave the task slots idle.  One worker
+    per item, at most one per CPU this process may run on.  Each call
+    starts with the caller's local properties as they are now (job
+    group, description, scheduler pool) and ``spark``'s job tags
+    (``inheritable_thread_target``), so every job a worker starts is
+    labelled like the caller's own.
+
+    Returns the results in input order.  Every item runs to the end
+    before this returns or raises; then the first failure in input
+    order is raised.  No worker thread outlives the call.
+    """
+    items = list(items)
+    if not items:
+        return []
+    target = inheritable_thread_target(spark)(fn)
+    with ThreadPoolExecutor(max_workers=min(len(items), len(os.sched_getaffinity(0)))) as pool:
+        futures = [pool.submit(target, item) for item in items]
+    return [f.result() for f in futures]
 
 
 # -- class-data-sharing archive ------------------------------------------------

@@ -2,9 +2,9 @@
 added because a 100 TB pipeline's results are themselves large).
 
 One parquet directory per query result under ``{path}/{query_name}/``,
-written fully distributed (no driver collect).  This is the sink every
-intermediate stage should use; Hyper/Excel are final-mile exports of
-small aggregates.
+written fully distributed (no driver collect), each result's write on
+its own driver thread.  This is the sink every intermediate stage should
+use; Hyper/Excel are final-mile exports of small aggregates.
 
 :func:`compact_parquet` is the table-maintenance half: incremental
 pipelines (per-batch ingests, streaming sinks) accrete small files, and
@@ -21,10 +21,20 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import run_concurrently
+
 
 def write_parquet(path: str, results: list[tuple[str, DataFrame]]) -> str:
-    for name, df in results:
-        df.write.mode("overwrite").parquet(f"{path.rstrip('/')}/{name}")
+    """Write each ``(name, df)`` to ``{path}/{name}/``, overwriting it.
+
+    The results are independent, and a small result's write is mostly
+    per-job driver overhead, so they are written side by side
+    (:func:`run_concurrently`); the first failing result is raised once
+    every write finished."""
+    run_concurrently(
+        SparkSession.active(),
+        lambda r: r[1].write.mode("overwrite").parquet(f"{path.rstrip('/')}/{r[0]}"),
+        results)
     return path
 
 

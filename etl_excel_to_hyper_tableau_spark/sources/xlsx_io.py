@@ -13,8 +13,9 @@ so the engine carries its own minimal OOXML SpreadsheetML implementation:
   worksheet per (name, columns, rows) tuple.
 
 Type inference mirrors what ``pd.read_excel`` produced on the reference's
-shipped files (SURVEY §1.3): numeric cells → int when integral else
-float; everything else stays ``str``; blanks → ``None``.
+shipped files (SURVEY §1.3): numeric cells → int when written as an
+integer that fits int64, else float; everything else stays ``str``;
+blanks → ``None``.
 """
 
 from __future__ import annotations
@@ -121,8 +122,7 @@ def read_sheet(path: str, sheet: str | int = 0) -> tuple[list[str], list[list]]:
                     if not txt:
                         val = None
                     elif ctype is None or ctype == "n":
-                        f = float(txt)
-                        val = int(f) if f.is_integer() and "e" not in txt.lower() and "." not in txt else f
+                        val = _number(txt)
                     elif ctype == "s":
                         val = shared[int(txt)]
                     elif ctype == "b":
@@ -140,6 +140,20 @@ def read_sheet(path: str, sheet: str | int = 0) -> tuple[list[str], list[list]]:
         return [], []
     cols = [str(c) if c is not None else f"Unnamed_{i}" for i, c in enumerate(dense[0])]
     return cols, dense[1:]
+
+
+def _number(txt: str) -> int | float:
+    """A numeric cell's value: plain integer text exactly as ``int``
+    (``float`` would round it past 2^53), anything else, and an integer
+    outside int64, as ``float`` — SQLite's rule for numeric literals."""
+    if "." not in txt and "e" not in txt and "E" not in txt:
+        try:
+            val = int(txt)
+        except ValueError:  # inf, nan
+            return float(txt)
+        if -2**63 <= val < 2**63:
+            return val
+    return float(txt)
 
 
 _CONTENT_TYPES = """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>

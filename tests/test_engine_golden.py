@@ -184,23 +184,34 @@ def _sqlite_pairs(spark, tmp_path, rows, sqls):
     """Run each of ``sqls`` (``{t}`` for the table) through the engine on
     one sheet of ``rows`` and through stdlib sqlite3; return the sorted
     (engine, sqlite3) rows per query name."""
+    return {name: pairs[0] for name, pairs in _sqlite_file_pairs(
+        spark, tmp_path, {"sales": (["company", "region", "qty"], rows)}, sqls).items()}
+
+
+def _sqlite_file_pairs(spark, tmp_path, files, sqls):
+    """:func:`_sqlite_pairs` over one bundle of several files: ``files``
+    maps a file stem to its sheet's (columns, rows); returns the sorted
+    (engine, sqlite3) rows per query name and file, in ``files`` order."""
     import sqlite3
 
-    xlsx_io.write_workbook(str(tmp_path / "sales.xlsx"),
-                           [("Sheet1", ["company", "region", "qty"], rows)])
+    for stem, (cols, rows) in files.items():
+        xlsx_io.write_workbook(str(tmp_path / f"{stem}.xlsx"), [("Sheet1", cols, rows)])
     bundle = QueryBundle.from_strings(
-        export_name="x", sink="parquet", matches=["sales"], sheets=["Sheet1"],
+        export_name="x", sink="parquet", matches=list(files), sheets=["Sheet1"],
         query_strings=[s.format(t="Sheet1.sheet") for s in sqls.values()],
         query_names=list(sqls))
     QueryEngine(spark, str(tmp_path), [bundle],
                 str(tmp_path / "out")).process_queries()
-    con = sqlite3.connect(":memory:")
-    con.execute("CREATE TABLE t (company, region, qty)")
-    con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
-    return {name: (sorted(tuple(r) for r in
-                          bundle.queried_dfs_by_query_name[name][0][1].collect()),
-                   sorted(con.execute(sql.format(t="t")).fetchall()))
-            for name, sql in sqls.items()}
+    out = {name: [] for name in sqls}
+    for i, (cols, rows) in enumerate(files.values()):
+        con = sqlite3.connect(":memory:")
+        con.execute(f"CREATE TABLE t ({', '.join(cols)})")
+        con.executemany(f"INSERT INTO t VALUES ({', '.join('?' * len(cols))})", rows)
+        for name, sql in sqls.items():
+            engine = bundle.queried_dfs_by_query_name[name][i][1].collect()
+            out[name].append((sorted(tuple(r) for r in engine),
+                              sorted(con.execute(sql.format(t="t")).fetchall())))
+    return out
 
 
 def test_recursive_union_retries_bare_columns_like_sqlite(spark, tmp_path):
@@ -255,3 +266,54 @@ def test_min_max_in_having_or_order_by_picks_the_extreme_row_like_sqlite(
     assert got["order_by"][1] == [("A", "N"), ("B", "W")]
     for name, (engine, lite) in got.items():
         assert engine == lite, name
+
+
+@pytest.fixture()
+def missing_aggregations(spark, monkeypatch):
+    """Count the ``spark.sql`` calls that fail with MISSING_AGGREGATION."""
+    failures = []
+    sql = spark.sql
+
+    def counting(query, *args, **kwargs):
+        try:
+            return sql(query, *args, **kwargs)
+        except Exception as e:
+            if "MISSING_AGGREGATION" in str(e):
+                failures.append(query)
+            raise
+
+    monkeypatch.setattr(spark, "sql", counting)
+    return failures
+
+
+_BARE_SQLS = {
+    "by_company": "SELECT company, region, COUNT(*) AS n FROM {t} GROUP BY company",
+    "by_region": "SELECT region, company, total(qty) AS units FROM {t} GROUP BY region",
+}
+
+
+def test_bare_column_retry_runs_once_per_query_not_per_file(
+        spark, tmp_path, missing_aggregations):
+    # the second and third file reuse the first file's rewrite: one failed
+    # analysis per query in a 3-file bundle, not one per (query, file)
+    cols = ["company", "region", "qty"]
+    got = _sqlite_file_pairs(spark, tmp_path, {
+        "jan": (cols, [["A", "N", 1], ["A", "N", 2], ["B", "S", 3]]),
+        "feb": (cols, [["A", "N", 4], ["C", "E", 5]]),
+        "mar": (cols, [["B", "S", 6], ["B", "S", 7], ["C", "E", None]])}, _BARE_SQLS)
+    assert len(missing_aggregations) == len(_BARE_SQLS)
+    for name, pairs in got.items():
+        assert len(pairs) == 3 and all(engine == lite for engine, lite in pairs), name
+
+
+def test_bare_column_retry_runs_per_schema(spark, tmp_path, missing_aggregations):
+    # files whose sheets have different schemas each find their own bare
+    # columns, and each still matches sqlite3
+    got = _sqlite_file_pairs(spark, tmp_path, {
+        "ints": (["company", "region", "qty"], [["A", "N", 1], ["A", "N", 2], ["B", "S", 3]]),
+        "text": (["company", "qty", "region", "note"],
+                 [["A", "many", "N", "x"], ["B", "1", "S", None], ["B", "2", "S", "y"]])},
+        _BARE_SQLS)
+    assert len(missing_aggregations) == 2 * len(_BARE_SQLS)
+    for name, pairs in got.items():
+        assert len(pairs) == 2 and all(engine == lite for engine, lite in pairs), name

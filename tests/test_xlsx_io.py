@@ -157,3 +157,22 @@ def test_read_sheet_edge_cases_keep_their_rows(tmp_path):
          ["plain", False, None, 7, None],
          [None, 1000.0, None, 2, None],
          [None, -4, None, None, "name"]])
+
+
+def test_integer_cells_keep_every_digit_and_overflow_to_double(spark, tmp_path):
+    # plain-integer text reads exactly as int (float rounded 2^53 + 1 down);
+    # outside int64 it reads as float, the type sqlite3 gives such a literal
+    import sqlite3
+
+    big = 12345678901234567891
+    p = str(tmp_path / "big.xlsx")
+    xlsx_io.write_workbook(p, [("Sheet1", ["exact", "huge"],
+                                [[2**53 + 1, 1], [-2**63, big], [2**63 - 1, -big]])])
+    cols, rows = xlsx_io.read_sheet(p, "Sheet1")
+    assert rows == [[2**53 + 1, 1], [-2**63, float(big)], [2**63 - 1, -float(big)]]
+    assert [type(v) for v in rows[1]] == [int, float]
+    assert sqlite3.connect(":memory:").execute(
+        f"SELECT typeof({big}), typeof({2**63 - 1})").fetchone() == ("real", "integer")
+    df = read_excel_sheet(spark, p, "Sheet1")
+    assert df.schema.simpleString() == "struct<exact:bigint,huge:double>"
+    assert [tuple(r) for r in df.collect()] == [tuple(r) for r in rows]
