@@ -25,15 +25,38 @@ from functools import reduce
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, Row, functions as F, types as T
 
 from ..plans.macro import strip_extension
 
 _ORD, _POS = "__hconcat_ord__", "__hconcat_pos__"
 
-# the driver-collect row cap: a concat collects its inputs on the driver,
-# and the Excel sink (sinks/excel.py) collects each result under the same cap
+# the driver-collect row cap: the concat's inputs, a UNION-distinct
+# recursion's rows and each Excel or Hyper sink result
 MAX_CONCAT_ROWS = 1_000_000
+
+
+def check_row_cap(rows: int, what: str) -> None:
+    """Refuse (``ValueError``) ``rows`` above :data:`MAX_CONCAT_ROWS`."""
+    if rows > MAX_CONCAT_ROWS:
+        raise ValueError(f"{what} would exceed {MAX_CONCAT_ROWS} rows (MAX_CONCAT_ROWS, the "
+                         "driver-collect cap); only the parquet sink writes larger results")
+
+
+def collect_rows(df: DataFrame, what: str) -> list[Row]:
+    """``df``'s rows on the driver, under :func:`check_row_cap`: nulls
+    ``None``, integers ``int``, a TIMESTAMP the session time zone's wall
+    clock, as ``toPandas`` gives it (``collect`` alone uses this
+    process's zone).  Read the rows by position, not by field name."""
+    fields = df.schema.fields
+    if any(isinstance(f.dataType, T.TimestampType) for f in fields):
+        names = [f"_{i}" for i in range(len(fields))]  # duplicate names allowed
+        df = df.toDF(*names).select([
+            F.col(n).cast(T.TimestampNTZType()) if isinstance(f.dataType, T.TimestampType)
+            else n for n, f in zip(names, fields)])
+    rows = df.limit(MAX_CONCAT_ROWS + 1).collect()
+    check_row_cap(len(rows), what)
+    return rows
 
 
 def prefix_columns(df: DataFrame, match: str) -> DataFrame:
@@ -72,8 +95,8 @@ def horizontal_concat(dfs: list[DataFrame]) -> DataFrame:
     The inputs, renamed to positional temp names and tagged with their
     ordinal and row position, are unioned and collected with one
     ``toArrow``; the result is a local relation built from the padded
-    blocks.  Raises ``ValueError`` when the inputs together hold more
-    than :data:`MAX_CONCAT_ROWS` rows.
+    blocks.  Raises ``ValueError`` (:func:`check_row_cap`) when the inputs
+    together hold more than :data:`MAX_CONCAT_ROWS` rows.
     """
     if not dfs:
         raise ValueError("horizontal_concat of zero frames")
@@ -87,10 +110,7 @@ def horizontal_concat(dfs: list[DataFrame]) -> DataFrame:
     ]
     union = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), tagged)
     table = union.limit(MAX_CONCAT_ROWS + 1).toArrow()
-    if table.num_rows > MAX_CONCAT_ROWS:
-        raise ValueError(
-            f"horizontal_concat inputs exceed {MAX_CONCAT_ROWS} rows; "
-            "collecting them would exhaust driver memory")
+    check_row_cap(table.num_rows, "horizontal_concat inputs")
     blocks = [table.filter(pc.equal(table[_ORD], i)).sort_by(_POS).select(names)
               for i, names in enumerate(temp)]
     n = max(b.num_rows for b in blocks)

@@ -20,7 +20,7 @@ Two layers close that hole:
   new rows are found in a Python key set under SQL ``UNION`` row
   equality.  The accumulator is capped at
   :data:`~..operators.combinators.MAX_CONCAT_ROWS`, the driver-collect
-  cap the concat and the Excel sink share.  Nothing is cached or
+  cap the concat and the Excel and Hyper sinks share.  Nothing is cached or
   checkpointed, so a call leaves no persisted RDD behind.
 * :func:`run_recursive_union_sql` — the SQL front door: parses the
   single-CTE ``WITH RECURSIVE name(cols) AS (base UNION step) main``
@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.conversion import LocalDataToArrowConversion
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..operators.combinators import MAX_CONCAT_ROWS
+from ..operators.combinators import check_row_cap
 
 _NAN = object()  # the one key every NaN maps to
 
@@ -104,10 +104,7 @@ def recursive_fixpoint(base: DataFrame,
                 new.append(row)
         if not new:
             return None
-        if len(seen) > MAX_CONCAT_ROWS:
-            raise ValueError(
-                f"recursive CTE exceeds {MAX_CONCAT_ROWS} rows (MAX_CONCAT_ROWS, "
-                "the driver-collect cap); collecting it would exhaust driver memory")
+        check_row_cap(len(seen), "recursive CTE")
         acc.append(LocalDataToArrowConversion.convert(new, schema, False))
         return acc[-1]
 

@@ -2,11 +2,11 @@
 
 The knobs below are the scale-relevant defaults (SURVEY.md §4.2): AQE on
 (runtime join re-planning + skew splitting), Arrow on (every
-pandas/toPandas boundary is a columnar batch, never row-wise — the
-reference inserted row-at-a-time, query_iterator.py:190-193, which we never
-do), and shuffle partitions sized to the local core count rather than the
-200 default.  On a real cluster the caller overrides
-``spark.sql.shuffle.partitions`` to ~2-3x total cores.
+pandas/toPandas boundary is a columnar batch, never row-wise), shuffle
+partitions sized to the local core count rather than the 200 default,
+and a ``local`` driver heap sized to the memory the process may use.
+On a real cluster the caller overrides ``spark.sql.shuffle.partitions``
+to ~2-3x total cores through ``get_spark(extra_conf=...)``.
 
 Cold start.  A one-shot batch run pays the driver JVM's start-up, most of
 it loading and verifying Spark's classes.  For ``local`` masters the
@@ -63,6 +63,7 @@ _DEFAULTS = {
 }
 
 _JAVA_OPTS = "spark.driver.extraJavaOptions"
+_CGROUP_LIMITS = ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes")
 # Environment variables whose directories the launcher puts on the driver
 # classpath besides the conf dir and $SPARK_HOME/jars.
 _CLASSPATH_ENV = ("SPARK_CLASSPATH", "SPARK_DIST_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR")
@@ -74,13 +75,14 @@ _QUIET = "-Xlog:cds*=off"
 
 def get_spark(app_name: str = "etl_excel_to_hyper_tableau_spark",
               master: str | None = None,
-              shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
     when no cluster master is configured; on a real deployment the master
     comes from spark-submit and this argument stays ``None``.
+    A ``local`` master gets :func:`driver_memory` as its driver heap;
+    ``extra_conf`` overrides it and every other default.
 
     When this call starts a new ``local`` driver JVM, it appends a class-
     data-sharing flag to ``spark.driver.extraJavaOptions`` (after
@@ -103,19 +105,14 @@ def get_spark(app_name: str = "etl_excel_to_hyper_tableau_spark",
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
     builder = builder.master(master)
+    cpus_str = master[master.find("[") + 1:master.find("]")] if "[" in master else "32"
+    conf = dict(_DEFAULTS)
+    conf["spark.sql.shuffle.partitions"] = "32" if cpus_str == "*" else str(int(cpus_str or 32))
     if master.startswith("local"):
         # In local mode every executor thread shares the driver JVM, whose
         # default 1g heap starves 32 threads (~30 MB each) long before the
-        # box does — sf1 shuffles OOM at the default.  Size the heap to the
-        # machine (cluster deployments get memory from spark-submit instead).
-        builder = builder.config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-    if shuffle_partitions is None:
-        cpus_str = master[master.find("[") + 1:master.find("]")] if "[" in master else "32"
-        shuffle_partitions = 32 if cpus_str == "*" else int(cpus_str or 32)
-    conf = dict(_DEFAULTS)
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+        # box does — sf1 shuffles OOM at the default.
+        conf["spark.driver.memory"] = driver_memory()
     if extra_conf:
         conf.update(extra_conf)
     cds = cds_launch(master, conf)
@@ -129,6 +126,17 @@ def get_spark(app_name: str = "etl_excel_to_hyper_tableau_spark",
         record_writer(spark, cds.dump)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def driver_memory() -> str:
+    """A quarter of the smaller of physical memory and the limit of the
+    cgroup mounted at ``/sys/fs/cgroup`` (v2 or v1), at least ``1g``: a
+    larger heap lets side-by-side local JVMs outgrow the host."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for limit in _CGROUP_LIMITS:
+        with contextlib.suppress(OSError, ValueError), open(limit) as f:
+            total = min(total, int(f.read()))  # "max" (no limit) is skipped
+    return f"{max(1024, total // 4 >> 20)}m"
 
 
 def run_concurrently(spark: SparkSession, fn: Callable, items: Iterable) -> list:

@@ -7,7 +7,7 @@ shipped sample workbooks were produced.  Spark-native equivalents:
 * :func:`read_csv` — ``spark.read.csv`` with header+inference (the
   scalable CSV scan; splittable, pushdown-capable, SURVEY §2A A2);
 * :func:`csv_to_excel` — the prep utility: first N rows to a worksheet
-  via the stdlib xlsx writer (no openpyxl dependency).  ``head(N)`` is
+  through the Excel sink (no openpyxl dependency).  ``head(N)`` is
   ``limit(N)`` (A3); "first" follows file order, as pandas' did.
 """
 
@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import xlsx_io
+from ..sinks.excel import write_excel
 
 
 def read_csv(spark: SparkSession, path: str,
@@ -30,10 +30,4 @@ def csv_to_excel(spark: SparkSession, csv_path: str, xlsx_path: str,
                  n_rows: int = 1000, sheet_name: str = "Sheet1") -> str:
     """Reference ``export_csv_to_excel`` (scratch.py:5-18): CSV → first
     ``n_rows`` → one xlsx worksheet."""
-    df = read_csv(spark, csv_path).limit(n_rows)
-    pdf = df.toPandas()
-    rows = [[None if v != v else v for v in row] if any(isinstance(v, float) for v in row)
-            else list(row)
-            for row in pdf.itertuples(index=False, name=None)]
-    xlsx_io.write_workbook(xlsx_path, [(sheet_name, list(pdf.columns), rows)])
-    return xlsx_path
+    return write_excel(xlsx_path, [(sheet_name, read_csv(spark, csv_path).limit(n_rows))])

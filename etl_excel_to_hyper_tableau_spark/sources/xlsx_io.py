@@ -176,6 +176,8 @@ def _cell_xml(ref: str, value) -> str:
     if isinstance(value, bool):
         return f'<c r="{ref}" t="b"><v>{1 if value else 0}</v></c>'
     if isinstance(value, (int, float)):
+        if value != value:  # NaN: a blank cell, as for a null
+            return ""
         return f'<c r="{ref}"><v>{value!r}</v></c>'
     text = escape(str(value))
     return f'<c r="{ref}" t="inlineStr"><is><t xml:space="preserve">{text}</t></is></c>'

@@ -18,7 +18,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
+    s = get_spark(app_name="tests", master="local[4]")
     yield s
 
 

@@ -4,7 +4,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from etl_excel_to_hyper_tableau_spark.plans import recursive
+from etl_excel_to_hyper_tableau_spark.operators import combinators
 from etl_excel_to_hyper_tableau_spark.plans.recursive import recursive_fixpoint
 from etl_excel_to_hyper_tableau_spark.sources import xlsx_io
 from etl_excel_to_hyper_tableau_spark.sources.csv import csv_to_excel, read_csv
@@ -68,9 +68,9 @@ def _counter(spark):
 
 
 def test_recursive_row_cap(spark, monkeypatch):
-    monkeypatch.setattr(recursive, "MAX_CONCAT_ROWS", 10)
+    monkeypatch.setattr(combinators, "MAX_CONCAT_ROWS", 10)
     assert recursive_fixpoint(*_counter(spark)).count() == 10  # at the cap
-    monkeypatch.setattr(recursive, "MAX_CONCAT_ROWS", 9)
+    monkeypatch.setattr(combinators, "MAX_CONCAT_ROWS", 9)
     with pytest.raises(ValueError, match="MAX_CONCAT_ROWS"):
         recursive_fixpoint(*_counter(spark))
 

@@ -143,8 +143,7 @@ def test_round_half_up_matches_spark_round():
             + [rng.randint(-10**9, 10**9) * 5e-10 for _ in range(300)]
             + [rng.randint(-10**7, 10**7) * 5e-7 for _ in range(300)]
             + [0.0, -0.0, 2.5e-9, -2.5e-9, 9.449999999999999e-05])
-    spark = get_spark(app_name="tests", master="local[4]",
-                      shuffle_partitions=4)
+    spark = get_spark(app_name="tests", master="local[4]")
     for nd in (4, 6, 9):
         df = spark.createDataFrame([(v,) for v in vals], "x double")
         got = [r["r"] for r in

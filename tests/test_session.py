@@ -1,10 +1,11 @@
 """The driver JVM's class-data-sharing archive (``session.py``): its key,
 where ``get_spark`` puts the flag, when it stays out, and how a dump is
-published.  No Spark session starts here: ``get_spark`` runs against a
+published; and the driver heap and shuffle partitions it defaults to.  No Spark session starts here: ``get_spark`` runs against a
 recording builder, and the archive checks run the real ``java``."""
 
 from __future__ import annotations
 
+import io
 import os
 import subprocess
 from types import SimpleNamespace
@@ -210,3 +211,35 @@ def test_dump_of_a_running_jvm_is_left_alone(env):
     assert not os.path.exists(os.path.join(session.cds_dir(), key + ".jsa"))
     # a dump no .pid file accounts for is deleted
     assert not os.path.exists(orphan)
+
+
+def test_driver_heap_is_a_quarter_of_the_usable_memory(monkeypatch):
+    v2, v1 = session._CGROUP_LIMITS
+    files = {v2: "max\n", v1: str(8 << 30)}
+
+    def fake_open(path, *args, **kwargs):
+        if path not in files:
+            raise FileNotFoundError(path)
+        return io.StringIO(files[path])
+
+    monkeypatch.setattr(session, "open", fake_open, raising=False)
+    monkeypatch.setattr(session.os, "sysconf", lambda name: {
+        "SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": (16 << 30) // 4096}[name])
+    assert session.driver_memory() == "2048m"  # the v1 limit, under physical memory
+    files[v1] = str(2 << 30)
+    assert session.driver_memory() == "1024m"  # the floor
+    files[v2] = str(6 << 30)
+    del files[v1]
+    assert session.driver_memory() == "1536m"
+    files.clear()
+    assert session.driver_memory() == "4096m"  # no cgroup: physical memory
+
+
+def test_local_defaults_follow_the_master_and_yield_to_extra_conf(env):
+    session.get_spark(master="local[3]")
+    assert env.builder.conf["spark.driver.memory"] == session.driver_memory()
+    assert env.builder.conf["spark.sql.shuffle.partitions"] == "3"
+    session.get_spark(master="local[3]", extra_conf={
+        "spark.driver.memory": "2g", "spark.sql.shuffle.partitions": "8"})
+    assert env.builder.conf["spark.driver.memory"] == "2g"
+    assert env.builder.conf["spark.sql.shuffle.partitions"] == "8"
